@@ -40,6 +40,16 @@ object GraphQL {
   final case class AnalysisError(msg: String, line: Int, column: Int)
       extends Exception(s"$msg at [$line:$column]")
 
+  /** A JSON string literal (null renders as ""), shared by the executor's
+    * rendering and the edge's error bodies. */
+  private[api] def jstr(s: String): String =
+    "\"" + Option(s).getOrElse("").flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   // ---- AST -------------------------------------------------------------
   sealed trait Value
   final case class VString(s: String) extends Value

@@ -442,14 +442,6 @@ final class GraphQLExecutor(
         jstr(out) + ":" + (if (present) render(row, children) else "null")
     }.mkString("{", ",", "}")
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private val fmtString: Any => String = {
     case null => "null"
     case s => jstr(s.toString)

@@ -4,8 +4,13 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.operators.VersionedRoot
+import graft.plans.BalanceMvRewrite
 import graft.warehouse.Warehouse
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 /** The reference's user-facing query surface re-expressed as a thin HTTP/
@@ -14,9 +19,9 @@ import org.apache.spark.sql.functions._
   * (HealthCheckService.scala:8-18, probe = `tenants(limit 1)`).
   *
   * Transport is deliberately minimal (JDK HttpServer, GET + query params,
-  * JSON out via Dataset.toJSON): the engine work — filters, pagination,
-  * joins, balance aggregation — happens in the SAME Catalyst plans the
-  * oracle gate checks; the edge only parses arguments and serializes rows.
+  * JSON rows out): the engine work — filters, pagination, joins, balance
+  * aggregation — happens in the SAME Catalyst plans the oracle gate
+  * checks; the edge only parses arguments and serializes rows.
   * Sangria's deferred-Fetcher waves (GraphQLService.scala:118-151) have no
   * analog here because nested fields are joins inside one plan.
   *
@@ -35,118 +40,129 @@ import org.apache.spark.sql.functions._
   *       GraphQLExecutor; selection sets drive the plans)
   *
   * Requests are served by a small fixed pool over one shared
-  * SparkSession, and built plans are memoized per (route, args) — see the
-  * plan-cache note below.
+  * SparkSession. Contract: a request sees the warehouse as of the last
+  * start()/refresh() — see the snapshot note below; call refresh() after
+  * a sync pass to serve what it wrote.
   */
 final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
 
-  private def table(name: String): DataFrame =
-    spark.read.parquet(s"$warehouseDir/$name")
-
-  // ---- plan cache ------------------------------------------------------
+  // ---- snapshot --------------------------------------------------------
   //
-  // Analysis + optimization of these small plans costs single-digit ms per
-  // request — the analog of the reference preparing a statement per query
-  // (GraphQLPersistence.scala:149-368). The LRU below memoizes the BUILT
-  // DataFrame per normalized (route, args) key, so repeated request shapes
-  // (point lookups, hot dashboards) skip plan construction entirely;
-  // execution still runs per request. Caching a DataFrame pins its file
-  // LISTING: the edge serves the warehouse snapshot it first read —
-  // call refresh() (or construct a new edge) after a sync pass.
-  private val planCache =
-    new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size > 256
+  // Everything a request reads is resolved ONCE per start()/refresh(): the
+  // tenant/account/transfer relations (one file listing and one parquet
+  // schema read each, instead of one per plan build), the GraphQL executor
+  // over them, the balance-MV rewrite bound to the MV version CURRENT then,
+  // and one LRU of answers. The LRU memoizes, per normalized (route, args)
+  // key, the FINAL Dataset a request collects — a REST route's toJSON
+  // Dataset, a GraphQL request's compiled root plans — so a hit skips
+  // parsing, analysis, optimization and physical planning and re-executes
+  // the already-executed plan: the exchanges its first run materialized
+  // (shuffles, broadcasts) are reused, which leaves about one Spark job
+  // per hit — the analog of the reference preparing a statement once
+  // (GraphQLPersistence.scala:149-368). An answer is stored only after it
+  // first succeeded.
+  private final class Snapshot {
+    private def table(name: String) = spark.read.parquet(s"$warehouseDir/$name")
+    val tenant: DataFrame = table("tenant")
+    val account: DataFrame = table("account")
+    val transfer: DataFrame = table("transfer")
+    // GraphQL endpoint (GraphQLRouter.scala:14-64) over the same relations
+    val graphql = new GraphQLExecutor(() => tenant, () => account, () => transfer)
+
+    // The sync pass publishes the balance MV through VersionedRoot (storage
+    // backend by scheme, VStore.forRoot): CURRENT resolves once per
+    // snapshot to an immutable v<N> directory, so every plan of this
+    // snapshot reads one MV version regardless of concurrent publishes.
+    // Deployment contract: refresh() at least every mvKeepVersions-1 sync
+    // passes, or the pinned version is vacuumed (Warehouse.sync's retire
+    // knob) and its reads take the stale-file path below.
+    val mv: Option[BalanceMvRewrite] = {
+      val (store, root) = Warehouse.balancesRoot(warehouseDir)
+      if (!VersionedRoot.publishedAt(store, root)) None
+      else Some(BalanceMvRewrite.forSource(spark, VersionedRoot.resolveAt(store, root),
+        Warehouse.balances(Warehouse.balanceChanges(transfer))))
     }
 
-  private def cached(key: String)(build: => DataFrame): DataFrame = {
-    val hit = planCache.synchronized(planCache.get(key))
-    if (hit != null) hit
-    else {
-      val df = build // build outside the lock: analysis may take ms
-      planCache.synchronized(planCache.put(key, df))
-      df
+    private val answers =
+      new java.util.LinkedHashMap[String, () => String](64, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[String, () => String]): Boolean =
+          size > 256
+      }
+
+    def cached: Int = answers.synchronized(answers.size)
+
+    def answer(key: String)(build: => () => String): String = {
+      val hit = answers.synchronized(answers.get(key))
+      if (hit != null) hit()
+      else {
+        val run = build // build outside the lock: analysis may take ms
+        val body = run()
+        answers.synchronized(answers.put(key, run))
+        body
+      }
     }
   }
 
-  /** Cached-plan count (bounded at 256) — exposed for tests/monitoring. */
-  def cachedPlans: Int = planCache.synchronized(planCache.size)
+  @volatile private var snap: Snapshot = _
 
-  /** Drop all cached plans (and their pinned file listings) so subsequent
-    * requests see the current warehouse state. The balance MV's CURRENT
-    * pointer is re-resolved here and ONLY here (and at start()): between
-    * refreshes the edge serves one pinned, immutable MV version, so a
-    * sync publishing mid-request can never yank files from a running
-    * scan — the swap-while-serving contract, deployed.
+  /** Cached-answer count of the current snapshot (bounded at 256) —
+    * exposed for tests/monitoring. */
+  def cachedPlans: Int = Option(snap).fold(0)(_.cached)
+
+  /** Serve the current warehouse from now on: one atomic swap to a new
+    * snapshot (fresh table listings, the balance MV's CURRENT pointer
+    * re-resolved, an empty answer cache). Between refreshes the edge
+    * serves one pinned, immutable MV version, so a sync publishing
+    * mid-request can never yank files from a running scan — the
+    * swap-while-serving contract, deployed.
     */
-  def refresh(): Unit = {
-    planCache.synchronized(planCache.clear())
-    gqlCache.synchronized(gqlCache.clear())
-    installMvRule() // re-resolve CURRENT + re-bind to the fresh lake listing
+  def refresh(): Unit = snap = new Snapshot
+
+  /** Answer `key` from the current snapshot. A sync pass replaces the
+    * account table (write-new-then-swap) and retires old MV versions, so
+    * files a snapshot pinned can vanish before the next refresh(); an
+    * answer that fails on them refreshes once (unless a concurrent request
+    * already did) and is built again on the new snapshot. A hit whose
+    * re-run reads only reused exchange output still answers from its own
+    * snapshot, as the contract says.
+    */
+  private def serve(key: String)(build: Snapshot => () => String): String = {
+    val s = snap
+    try s.answer(key)(build(s))
+    catch {
+      case e: Throwable if filesGone(e) =>
+        synchronized { if (snap eq s) refresh() }
+        val fresh = snap
+        fresh.answer(key)(build(fresh))
+    }
   }
+
+  private def filesGone(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException => true
+      case t: SparkThrowable =>
+        String.valueOf(t.getCondition).startsWith("FAILED_READ_FILE.FILE_NOT_EXIST")
+      case _ => false
+    }
 
   // ---- balance-MV rewrite on the serving path --------------------------
   //
   // M10 deployed: when the sync pass maintained `$warehouseDir/balances`
-  // (Warehouse.sync does on every transfer-appending pass), the edge
-  // installs BalanceMvRewrite on its session, so the declarative full-lake
-  // balance report (`/balances`, GraphQL `balances`) plans as a scan of
-  // |accounts| pre-aggregated rows instead of aggregating the transfer
-  // lake per request. extraOptimizations is the runtime form of the
-  // cluster deployment (`spark.sql.extensions=graft.functions
-  // .GraftExtensions` + the spark.graft.balance.{mv,lake}Path confs —
-  // GraftExtensions injects the same conf-bound rule at session build).
-  // Scoped point lookups and pages keep their balanceOf/balancesFor plans:
-  // the rule's soundness checks decline subset aggregates by design.
-  private var mvRule: Option[graft.plans.BalanceMvRewrite] = None
-
-  private def installMvRule(): Unit = synchronized {
-    mvRule.foreach { r =>
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq r)
-    }
-    mvRule = None
-    // the sync pass publishes the MV through VersionedRoot: resolve the
-    // CURRENT pointer ONCE per install — the resolved v<N> directory is
-    // immutable, so every plan built until the next refresh() reads one
-    // consistent MV version regardless of concurrent publishes. The
-    // root helper dispatches the storage backend by scheme (r19): local
-    // warehouseDirs read through java.nio, hdfs://-style ones through
-    // the Hadoop FileSystem — same protocol, same pointer; copy-rename
-    // object stores still fail fast (VStore.forRoot). Deployment
-    // contract: refresh() at least every mvKeepVersions-1 sync passes,
-    // or the pinned version can be vacuumed mid-serve (Warehouse.sync's
-    // retire knob).
-    val (mvStore, mvRoot) =
-      graft.warehouse.Warehouse.balancesRoot(warehouseDir)
-    if (graft.operators.VersionedRoot.publishedAt(mvStore, mvRoot)) {
-      val pinned = graft.operators.VersionedRoot.resolveAt(mvStore, mvRoot)
-      val rule = graft.plans.BalanceMvRewrite.forSource(spark, pinned,
-        Warehouse.balances(Warehouse.balanceChanges(table("transfer"))))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-      mvRule = Some(rule)
-    }
+  // (Warehouse.sync does on every transfer-appending pass), the current
+  // snapshot's BalanceMvRewrite answers the declarative full-lake balance
+  // report (`/balances`, GraphQL `balances`) as a scan of |accounts|
+  // pre-aggregated rows instead of aggregating the transfer lake per
+  // request. extraOptimizations is the runtime form of the cluster
+  // deployment (`spark.sql.extensions=graft.functions.GraftExtensions` +
+  // the spark.graft.balance.{mv,lake}Path confs — GraftExtensions injects
+  // the same conf-bound rule at session build). This one rule, installed
+  // from start() to stop(), delegates to the snapshot: refresh() swaps the
+  // MV version with everything else. Scoped point lookups and pages keep
+  // their balanceOf/balancesFor plans (the rule declines subset aggregates).
+  private val mvRewrite = new Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      Option(snap).flatMap(_.mv).fold(plan)(_(plan))
   }
-
-  private def uninstallMvRule(): Unit = synchronized {
-    mvRule.foreach { r =>
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq r)
-    }
-    mvRule = None
-  }
-
-  /** The full per-tenant balance report — the declarative lake aggregate
-    * the MV rule answers from the pre-agg when installed. The tenant
-    * filter sits ABOVE the aggregate (on its grouping key), so the
-    * rewritten plan is a filtered MV scan.
-    */
-  private def balancesDf(tenant: String): DataFrame =
-    Warehouse.balances(Warehouse.balanceChanges(table("transfer")))
-      .filter(col("tenant") === lit(tenant))
-      .withColumn("balance", col("balance").cast("double"))
-      .orderBy("name")
 
   /** Injective key: components are re-encoded so decoded values containing
     * '&'/'=' cannot collide with genuinely distinct parameter sets.
@@ -156,7 +172,6 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     p.toSeq.sorted.map { case (k, v) => s"${enc(k)}=${enc(v)}" }
       .mkString(s"$path?", "&", "")
   }
-
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
@@ -188,26 +203,26 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     ex.close()
   }
 
-  private def json(df: DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
-
   private def handle(path: String)(f: Map[String, String] => String): Unit =
     server.createContext(path, (ex: HttpExchange) =>
       try respond(ex, 200, f(params(ex)))
       catch {
         case e: IllegalArgumentException =>
-          respond(ex, 400, s"""{"error":${quote(e.getMessage)}}""")
+          respond(ex, 400, s"""{"error":${GraphQL.jstr(e.getMessage)}}""")
         case e: Throwable =>
-          respond(ex, 500, s"""{"error":${quote(e.toString)}}""")
+          respond(ex, 500, s"""{"error":${GraphQL.jstr(e.toString)}}""")
       })
 
-  private def quote(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A cached REST route: the answer is the toJSON Dataset of the frame
+    * `df` builds on the snapshot, collected into a JSON array per request.
+    */
+  private def rest(path: String)(df: (Snapshot, Map[String, String]) => DataFrame): Unit =
+    handle(path) { p =>
+      serve(cacheKey(path, p)) { s =>
+        val rows = df(s, p).toJSON
+        () => rows.collect().mkString("[", ",", "]")
+      }
+    }
 
   private def required(p: Map[String, String], k: String): String =
     p.getOrElse(k, throw new IllegalArgumentException(s"missing arg: $k"))
@@ -232,20 +247,10 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     * JSON body {query, operationName, variables} (array-wrapped bodies
     * accepted, :38-44) and GET /graphql?query=&operation=. Error mapping
     * follows RootRouter.scala:22-41 — syntax errors and query-analysis
-    * errors are 400s carrying the source position.
+    * errors are 400s carrying the source position. Compiled root plans
+    * share the snapshot's answer cache, keyed per (document, operation,
+    * variables).
     */
-  private lazy val graphql = new GraphQLExecutor(
-    () => table("tenant"), () => table("account"), () => table("transfer"))
-
-  /** Compiled GraphQL root plans per (document, operation, variables) —
-    * same LRU/snapshot semantics as the REST plan cache.
-    */
-  private val gqlCache =
-    new java.util.LinkedHashMap[String, List[graphql.RootPlan]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, List[graphql.RootPlan]]): Boolean = size > 256
-    }
-
   private def handleGraphql(ex: HttpExchange): Unit =
     try {
       val (query, opName, vars) = ex.getRequestMethod match {
@@ -259,37 +264,27 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
         case m =>
           throw new IllegalArgumentException(s"unsupported method $m")
       }
-      // injective key: encoded components so variable values containing
-      // the delimiters cannot collide across distinct requests
-      val key = {
-        def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-        "graphql:" + enc(query) + " " + enc(opName.getOrElse("")) + " " +
-          vars.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${enc(k)}=${enc(String.valueOf(v))}" }
-            .mkString(",")
-      }
-      val compiled = {
-        val hit = gqlCache.synchronized(gqlCache.get(key))
-        if (hit != null) hit
-        else {
-          val p = graphql.plans(query, opName, vars)
-          gqlCache.synchronized(gqlCache.put(key, p))
-          p
-        }
-      }
-      respond(ex, 200, graphql.renderResponse(compiled))
+      // variable names cannot contain '.', so "var." keys never collide
+      // with the document and operation components
+      val key = cacheKey("/graphql",
+        vars.map { case (k, v) => s"var.$k" -> String.valueOf(v) } ++
+          Map("query" -> query, "operation" -> opName.getOrElse("")))
+      respond(ex, 200, serve(key) { s =>
+        val plans = s.graphql.plans(query, opName, vars)
+        () => s.graphql.renderResponse(plans)
+      })
     } catch {
       case GraphQL.SyntaxError(msg, line, col) =>
         respond(ex, 400,
-          s"""{"syntaxError":${quote(s"Syntax error while parsing GraphQL query. Invalid input, $msg")},""" +
+          s"""{"syntaxError":${GraphQL.jstr(s"Syntax error while parsing GraphQL query. Invalid input, $msg")},""" +
             s""""locations":[{"line":$line,"column":$col}]}""")
       case GraphQL.AnalysisError(msg, line, col) =>
         respond(ex, 400,
-          s"""{"errors":[{"message":${quote(msg)},"locations":[{"line":$line,"column":$col}]}]}""")
+          s"""{"errors":[{"message":${GraphQL.jstr(msg)},"locations":[{"line":$line,"column":$col}]}]}""")
       case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":${quote(e.getMessage)}}""")
+        respond(ex, 400, s"""{"error":${GraphQL.jstr(e.getMessage)}}""")
       case e: Throwable =>
-        respond(ex, 500, s"""{"error":${quote(e.toString)}}""")
+        respond(ex, 500, s"""{"error":${GraphQL.jstr(e.toString)}}""")
     }
 
   /** {query, operationName, variables} out of the POST body; a JSON array
@@ -351,74 +346,73 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
       valueDateGt = ts("value_date_gt"), valueDateGte = ts("value_date_gte"))
   }
 
+
   def start(): HttpEdge = {
     handle("/health") { _ =>
       val ok =
-        try Api.tenants(table("tenant"), limit = 1, offset = 0).count() >= 0
+        try Api.tenants(snap.tenant, limit = 1, offset = 0).count() >= 0
         catch { case _: Throwable => false }
       s"""{"healthy":$ok,"graphql":$ok}"""
     }
-    handle("/tenants") { p =>
+    rest("/tenants") { (s, p) =>
       // `after=<name>` switches to keyset pagination (O(page) deep scans)
-      json(cached(cacheKey("/tenants", p))(p.get("after") match {
+      p.get("after") match {
         case a @ Some(_) =>
           noOffsetWithAfter(p)
-          Api.tenantsAfter(table("tenant"), a,
-            p.getOrElse("limit", "100").toLong)
-        case None => Api.tenants(table("tenant"),
+          Api.tenantsAfter(s.tenant, a, p.getOrElse("limit", "100").toLong)
+        case None => Api.tenants(s.tenant,
           p.getOrElse("limit", "100").toLong, p.getOrElse("offset", "0").toLong)
-      }))
+      }
     }
-    handle("/tenant") { p =>
-      json(cached(cacheKey("/tenant", p))(Api.tenant(table("tenant"), required(p, "name"))))
-    }
-    handle("/accounts") { p =>
+    rest("/tenant") { (s, p) => Api.tenant(s.tenant, required(p, "name")) }
+    rest("/accounts") { (s, p) =>
       // page on the raw account table, join balances ONCE on the page
       // (feeding the balance join into the filter input would compute the
       // full aggregation twice per request)
-      json(cached(cacheKey("/accounts", p))({
-        // `after=<name>` switches to keyset pagination, like /transfers
-        val page = p.get("after") match {
-          case a @ Some(_) =>
-            noOffsetWithAfter(p)
-            Api.accountsAfter(table("account"), required(p, "tenant"),
-              currency = p.get("currency"), format = p.get("format"),
-              after = a, limit = p.getOrElse("limit", "100").toLong)
-          case None => Api.accounts(table("account"), required(p, "tenant"),
+      // `after=<name>` switches to keyset pagination, like /transfers
+      val page = p.get("after") match {
+        case a @ Some(_) =>
+          noOffsetWithAfter(p)
+          Api.accountsAfter(s.account, required(p, "tenant"),
             currency = p.get("currency"), format = p.get("format"),
-            limit = p.getOrElse("limit", "100").toLong,
-            offset = p.getOrElse("offset", "0").toLong)
-        }
-        // balancesFor scopes the aggregate to the page's accounts
-        page.join(Warehouse.balancesFor(table("transfer"), page),
-          Seq("tenant", "name"), "left")
-          .withColumn("balance",
-            coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
-          .orderBy("name")
-      }))
+            after = a, limit = p.getOrElse("limit", "100").toLong)
+        case None => Api.accounts(s.account, required(p, "tenant"),
+          currency = p.get("currency"), format = p.get("format"),
+          limit = p.getOrElse("limit", "100").toLong,
+          offset = p.getOrElse("offset", "0").toLong)
+      }
+      // balancesFor scopes the aggregate to the page's accounts
+      page.join(Warehouse.balancesFor(s.transfer, page),
+        Seq("tenant", "name"), "left")
+        .withColumn("balance",
+          coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
+        .orderBy("name")
     }
-    handle("/account") { p =>
+    rest("/account") { (s, p) =>
       val t = required(p, "tenant"); val n = required(p, "name")
       // point lookup: Warehouse.balanceOf pushes the credit/debit
       // disjunction into the transfer scan (the page route's shared
       // balance aggregate would scan every transfer for one account)
-      json(cached(cacheKey("/account", p))(
-        Api.account(
-          table("account")
-            .join(Warehouse.balanceOf(table("transfer"), t, n),
-              Seq("tenant", "name"), "left")
-            .withColumn("balance",
-              coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
-            .select("tenant", "name", "currency", "format", "balance"),
-          t, n)))
+      Api.account(
+        s.account
+          .join(Warehouse.balanceOf(s.transfer, t, n),
+            Seq("tenant", "name"), "left")
+          .withColumn("balance",
+            coalesce(col("balance"), lit(0).cast("decimal(38,18)")).cast("double"))
+          .select("tenant", "name", "currency", "format", "balance"),
+        t, n)
     }
-    handle("/transfers") { p => json(cached(cacheKey("/transfers", p))(transfersDf(p))) }
+    rest("/transfers")(transfersDf)
     // the full per-tenant balance report (extension §2x): the declarative
-    // lake aggregate, answered from the maintained MV when the rule is
-    // installed (see installMvRule) — the one route that would otherwise
-    // aggregate the whole transfer lake per request
-    handle("/balances") { p =>
-      json(cached(cacheKey("/balances", p))(balancesDf(required(p, "tenant"))))
+    // lake aggregate with the tenant filter ABOVE it (on its grouping key),
+    // so the snapshot's MV rewrite (see mvRewrite) answers it as a filtered
+    // MV scan — the one route that would otherwise aggregate the whole
+    // transfer lake per request
+    rest("/balances") { (s, p) =>
+      Warehouse.balances(Warehouse.balanceChanges(s.transfer))
+        .filter(col("tenant") === lit(required(p, "tenant")))
+        .withColumn("balance", col("balance").cast("double"))
+        .orderBy("name")
     }
     server.createContext("/graphql", (ex: HttpExchange) => handleGraphql(ex))
     // the reference serves a GraphiQL UI next to the endpoint
@@ -435,12 +429,14 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     // concurrent Spark jobs (FIFO-scheduled). Pool ≈ the reference's DB
     // connection pool, not one-thread-per-request.
     server.setExecutor(pool)
-    installMvRule()
+    refresh()
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ mvRewrite
     server.start()
     this
   }
 
-  private def transfersDf(p: Map[String, String]): DataFrame = {
+  private def transfersDf(s: Snapshot, p: Map[String, String]): DataFrame = {
     // `after=<transaction>,<transfer>` switches to keyset pagination —
     // the O(page) path for deep scans (offset stays for parity with the
     // reference's drop/take)
@@ -452,11 +448,11 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
             case _ => throw new IllegalArgumentException(
               "after must be <transaction>,<transfer>")
           }
-          Api.transfersAfter(table("transfer"), required(p, "tenant"),
+          Api.transfersAfter(s.transfer, required(p, "tenant"),
             transferArgs(p), after = Some(cur),
             limit = p.getOrElse("limit", "100").toLong)
         case None =>
-          Api.transfers(table("transfer"), required(p, "tenant"),
+          Api.transfers(s.transfer, required(p, "tenant"),
             transferArgs(p),
             limit = p.getOrElse("limit", "100").toLong,
             offset = p.getOrElse("offset", "0").toLong)
@@ -468,8 +464,8 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
           .select(col("credit_tenant").as("tenant"), col("credit_name").as("name"))
           .unionByName(page
             .select(col("debit_tenant").as("tenant"), col("debit_name").as("name")))
-        Api.transfersResolved(page, table("account"),
-          Warehouse.balancesFor(table("transfer"), keys))
+        Api.transfersResolved(page, s.account,
+          Warehouse.balancesFor(s.transfer, keys))
           .withColumn("credit_balance", col("credit_balance").cast("double"))
           .withColumn("debit_balance", col("debit_balance").cast("double"))
       }
@@ -481,7 +477,8 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   }
 
   def stop(): Unit = {
-    uninstallMvRule()
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ eq mvRewrite)
     server.stop(0)
     pool.shutdown()
   }

@@ -22,22 +22,38 @@ class HttpEdgeSpec extends SparkSpec {
     (code, body)
   }
 
+  private def put(root: java.nio.file.Path, rel: String, content: String): Unit = {
+    val p = root.resolve(rel)
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, content): Unit
+  }
+
   private def fixture(): String = {
     val root = Files.createTempDirectory("journal")
-    def put(rel: String, content: String): Unit = {
-      val p = root.resolve(rel)
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, content)
-    }
-    put("t_TENANT/account/CREDIT/snapshot/0000000000", "CZK FORMAT_T\n")
-    put("t_TENANT/account/DEBIT/snapshot/0000000000", "CZK FORMAT_T\n")
-    put("t_TENANT/account/IDLE/snapshot/0000000000", "EUR FORMAT_T\n")
-    put("t_TENANT/account/CREDIT/events/0000000000/1_1_TRN", "1\n")
-    put("t_TENANT/account/DEBIT/events/0000000000/1_-1_TRN", "1\n")
-    put("t_TENANT/transaction/TRN",
+    put(root, "t_TENANT/account/CREDIT/snapshot/0000000000", "CZK FORMAT_T\n")
+    put(root, "t_TENANT/account/DEBIT/snapshot/0000000000", "CZK FORMAT_T\n")
+    put(root, "t_TENANT/account/IDLE/snapshot/0000000000", "EUR FORMAT_T\n")
+    put(root, "t_TENANT/account/CREDIT/events/0000000000/1_1_TRN", "1\n")
+    put(root, "t_TENANT/account/DEBIT/events/0000000000/1_-1_TRN", "1\n")
+    put(root, "t_TENANT/transaction/TRN",
       "committed\nTRX TENANT CREDIT TENANT DEBIT 2020-01-01T00:00:00Z 1 CZK\n")
     root.toString
   }
+
+  /** A delta for the next sync pass: committed transfer TRN<v> moving
+    * `amount` from DEBIT to CREDIT, announced as event version v of both
+    * accounts (so the pass advances both watermarks and swaps the account
+    * table). */
+  private def addTransfer(journal: String, v: Int, amount: Int): Unit = {
+    val root = java.nio.file.Paths.get(journal)
+    put(root, s"t_TENANT/account/CREDIT/events/0000000000/1_${amount}_TRN$v", s"$v\n")
+    put(root, s"t_TENANT/account/DEBIT/events/0000000000/1_-${amount}_TRN$v", s"$v\n")
+    put(root, s"t_TENANT/transaction/TRN$v",
+      s"committed\nTRX TENANT CREDIT TENANT DEBIT 2020-01-0${v}T00:00:00Z $amount CZK\n")
+  }
+
+  private def gql(port: Int, doc: String): (Int, String) =
+    get(port, "/graphql?query=" + java.net.URLEncoder.encode(doc, "UTF-8"))
 
   private def withEdge[A](f: Int => A): A = {
     val wh = Files.createTempDirectory("wh").toString
@@ -281,5 +297,131 @@ class HttpEdgeSpec extends SparkSpec {
         assert(get(port, "/tenants")._2.contains("TENANT")) // rebuilds fine
       } finally exec.shutdown()
     } finally edge.stop()
+  }
+
+  test("a sync pass swapping the account table leaves no request failing on stale files") {
+    // write-new-then-swap deletes the account files the edge's snapshot
+    // pinned; a request that reads them refreshes the edge once and
+    // answers from the new snapshot instead of failing with a 500
+    val journal = fixture()
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, journal, wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    try {
+      val port = edge.boundPort
+      val credit = "/account?tenant=TENANT&name=CREDIT"
+      val nested = """{ transfers(tenant: "TENANT", limit: 10, offset: 0) {
+                     |  transaction credit { name balance } debit { name balance } } }""".stripMargin
+      def balances(response: (Int, String)): Set[String] = {
+        val (code, body) = response
+        assert(code == 200, s"$code $body")
+        "\"balance\":(-?[\\d.]+)".r.findAllMatchIn(body).map(_.group(1)).toSet
+      }
+      assert(balances(get(port, credit)) == Set("1.0"))
+      assert(balances(gql(port, nested)) == Set("1", "-1"))
+
+      // pass 2 (+2) swaps the account table out from under the snapshot.
+      // Cached shapes answer 200 from one state: their executed plan's
+      // reused exchange output (the snapshot, pre-pass), or — when the
+      // re-run reads the swapped files — a refreshed snapshot (post-pass)
+      addTransfer(journal, 2, 2)
+      Warehouse.sync(spark, journal, wh)
+      assert(Set(Set("1.0"), Set("3.0"))(balances(get(port, credit))))
+      assert(Set(Set("1", "-1"), Set("3", "-3"))(balances(gql(port, nested))))
+      // a shape first seen now reads the swapped files: refresh, post-pass;
+      // the refreshed snapshot serves the cached shapes post-pass too
+      assert(balances(get(port, "/account?tenant=TENANT&name=DEBIT")) == Set("-3.0"))
+      assert(balances(get(port, credit)) == Set("3.0"))
+      assert(balances(gql(port, nested)) == Set("3", "-3"))
+
+      // pass 3 (+4): a new nested GraphQL shape takes the same path
+      addTransfer(journal, 3, 4)
+      Warehouse.sync(spark, journal, wh)
+      assert(balances(gql(port,
+        """{ transfers(tenant: "TENANT", limit: 5, offset: 0) { transfer debit { balance } } }""")) ==
+        Set("-7"))
+      assert(balances(get(port, credit)) == Set("7.0"))
+      assert(balances(gql(port, nested)) == Set("7", "-7"))
+    } finally edge.stop()
+  }
+
+  test("new and cached shapes answer from one snapshot until refresh()") {
+    val journal = fixture()
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, journal, wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    try {
+      val port = edge.boundPort
+      def transactions(path: String): Seq[String] = {
+        val (c, body) = get(port, path)
+        assert(c == 200, s"$path -> $c $body")
+        "\"transaction\":\"(TRN\\d*)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
+      }
+      val cachedShape = "/transfers?tenant=TENANT"
+      val newShape = "/transfers?tenant=TENANT&limit=50"
+      assert(transactions(cachedShape) == Seq("TRN"))
+      addTransfer(journal, 2, 2)
+      Warehouse.sync(spark, journal, wh)
+      // the pass appended TRN2, but the snapshot pinned the listing of
+      // start(): the cached shape and a shape built after the pass agree
+      assert(transactions(cachedShape) == Seq("TRN"))
+      assert(transactions(newShape) == Seq("TRN"))
+      edge.refresh()
+      assert(transactions(cachedShape) == Seq("TRN", "TRN2"))
+      assert(transactions(newShape) == Seq("TRN", "TRN2"))
+    } finally edge.stop()
+  }
+
+  test("a cache hit runs one Spark job; no request re-reads a parquet schema") {
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, fixture(), wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    // every job's description and stage names, in listener-bus order
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[(String, Seq[String])]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.put((Option(js.properties)
+          .map(_.getProperty("spark.job.description")).orNull,
+          js.stageInfos.map(_.name)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // the stage names of the jobs `request` ran: a sentinel job follows it,
+    // and the bus delivers in order, so every earlier job is queued by the
+    // time the sentinel is — counts, not timings
+    var sentinels = 0
+    def jobsOf(request: => Unit): Seq[Seq[String]] = {
+      request
+      sentinels += 1
+      val mark = s"sentinel-$sentinels"
+      spark.sparkContext.setJobDescription(mark)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      Iterator.continually(jobs.poll(120, java.util.concurrent.TimeUnit.SECONDS))
+        .map(j => { assert(j != null, s"$mark never reached the listener"); j })
+        .takeWhile(_._1 != mark).map(_._2).toVector
+    }
+    try {
+      val port = edge.boundPort
+      def ok(path: String): Unit = {
+        val (c, b) = get(port, path); assert(c == 200, s"$path -> $c $b")
+      }
+      val doc = """{ transfers(tenant: "TENANT", limit: 10, offset: 0) {
+                  |  transaction credit { name balance } } }""".stripMargin
+      val shapes = Seq[(String, () => Unit)](
+        "/account" -> (() => ok("/account?tenant=TENANT&name=CREDIT")),
+        "/transfers" -> (() => ok("/transfers?tenant=TENANT&status=committed&resolve=true")),
+        "graphql" -> (() => assert(gql(port, doc)._1 == 200)))
+      val cold = shapes.map { case (n, r) => n -> jobsOf(r()) }
+      val hot = shapes.map { case (n, r) => n -> jobsOf(r()) }
+      hot.foreach { case (n, js) =>
+        assert(js.size == 1, s"$n: a hit must re-run only the final stage, ran ${js.size} jobs: $js")
+      }
+      val schemaReads = (cold ++ hot).flatMap { case (n, js) =>
+        js.flatten.filter(_.startsWith("parquet at")).map(n -> _) }
+      assert(schemaReads.isEmpty, s"requests re-read parquet schemas: $schemaReads")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      edge.stop()
+    }
   }
 }
