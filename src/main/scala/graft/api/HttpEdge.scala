@@ -49,8 +49,8 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   // ---- snapshot --------------------------------------------------------
   //
   // Everything a request reads is resolved ONCE per start()/refresh(): the
-  // tenant/account/transfer relations (one file listing and one parquet
-  // schema read each, instead of one per plan build), the GraphQL executor
+  // tenant/account/transfer relations (one file listing each, read with the
+  // schemas sync writes: no schema job), the GraphQL executor
   // over them, the balance-MV rewrite bound to the MV version CURRENT then,
   // and one LRU of answers. The LRU memoizes, per normalized (route, args)
   // key, the FINAL Dataset a request collects — a REST route's toJSON
@@ -62,7 +62,8 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   // (GraphQLPersistence.scala:149-368). An answer is stored only after it
   // first succeeded.
   private final class Snapshot {
-    private def table(name: String) = spark.read.parquet(s"$warehouseDir/$name")
+    private def table(name: String) =
+      spark.read.schema(Warehouse.tableSchemas(name)).parquet(s"$warehouseDir/$name")
     val tenant: DataFrame = table("tenant")
     val account: DataFrame = table("account")
     val transfer: DataFrame = table("transfer")

@@ -1,6 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, RecordReader, TaskAttemptContext}
+import org.apache.hadoop.mapreduce.lib.input.{CombineFileInputFormat, CombineFileRecordReader, CombineFileSplit, FileInputFormat}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,6 +33,9 @@ import org.apache.spark.sql.types._
   * driver-side iteration, no UDFs, fully whole-stage-codegen'd. On a real
   * cluster the glob listing is driver metadata work (same as any Hive-style
   * partitioned table) and the file contents are read by executors.
+  * [[transfersOf]] is the incremental form for transactions: it reads the
+  * named `(tenant, transaction)` files only, looked up by name instead of
+  * listed by glob, so a sync pass reads what its new events announce.
   */
 object Journal {
 
@@ -40,14 +50,14 @@ object Journal {
     f"$version%010d"
   }
 
-  /** Glob-read tolerant of "no matches" (fresh/partial journals): Spark
-    * throws on a glob with zero matches, so probe with Hadoop's globStatus
-    * first and fall back to an empty DataFrame of the right shape.
+  /** Whole-file read of a journal glob: one (value, path) row per matched
+    * file. A glob with zero matches (fresh or partial journals) reads as
+    * an empty frame.
     *
-    * The read itself is `SparkContext.wholeTextFiles`, not the DataFrame
-    * file source: journal files are sub-KB and number in the thousands
-    * (millions at scale), and `CombineFileInputFormat` packs them into
-    * `defaultParallelism` byte-budgeted splits — one task per split. The
+    * Journal files are sub-KB and number in the thousands (millions at
+    * scale), so the read packs them into `defaultParallelism`
+    * byte-budgeted splits (a `CombineFileInputFormat`, the way
+    * `SparkContext.wholeTextFiles` does), one task per split. The
     * DataFrame text source pays per-FILE costs twice (path resolution at
     * plan build, then a scheduler task per file at exec), which measured
     * ~15x slower on a 1200-file tree and grows linearly with file count.
@@ -55,26 +65,96 @@ object Journal {
     * columnar Catalyst — this is exactly the "genuine per-partition
     * imperative IO" boundary, kept as small as possible.
     */
-  private def safeWholetext(spark: SparkSession, glob: String): DataFrame = {
-    // Resolve the filesystem FROM the path: FileSystem.get(conf) returns the
-    // default FS, which breaks for s3a://.. or hdfs://.. journal roots.
-    val p = new Path(glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = fs.globStatus(p)
-    if (matches == null || matches.isEmpty) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("value", StringType), StructField("path", StringType))))
-    } else {
-      import spark.implicits._
-      // FileInputFormat.setInputPaths treats ',' as a path separator —
-      // escape it so a journal root containing a comma stays one path
-      val escaped = org.apache.hadoop.util.StringUtils.escapeString(glob)
-      spark.sparkContext
-        .wholeTextFiles(escaped, spark.sparkContext.defaultParallelism)
-        .toDF("path", "value")
-        .select("value", "path")
+  private def globWholetext(spark: SparkSession, glob: String): DataFrame =
+    wholeFiles(spark, Seq(new Path(glob)), literal = false, name = glob)
+
+  /** The shared reader under [[globWholetext]] and [[transfersOf]]: the
+    * files `paths` name — globs, or literal file paths when `literal` —
+    * listed ONCE, when the first job plans the read (the listing is
+    * memoized in the RDD's partitions; no existence probe precedes it).
+    * A literal path that does not exist, like a glob that matches
+    * nothing, contributes no row. `name` names the RDD (as
+    * `wholeTextFiles` names it after its path).
+    */
+  private def wholeFiles(spark: SparkSession, paths: Seq[Path], literal: Boolean,
+      name: String): DataFrame = {
+    import spark.implicits._
+    val raw =
+      if (paths.isEmpty) spark.sparkContext.emptyRDD[(String, String)]
+      else {
+        val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+        // Path varargs, not a comma-joined string: every path stays one
+        // path whatever it contains (',', '{', '[' and '*' included)
+        FileInputFormat.setInputPaths(job, paths: _*)
+        job.getConfiguration.setBoolean(WholeFiles.LiteralKey, literal)
+        job.getConfiguration.setInt(WholeFiles.MinPartitionsKey, spark.sparkContext.defaultParallelism)
+        spark.sparkContext
+          .newAPIHadoopRDD(job.getConfiguration, classOf[WholeFiles], classOf[Text], classOf[Text])
+          .setName(name)
+          .map { case (k, v) => (k.toString, v.toString) }
+      }
+    raw.toDF("path", "value").select("value", "path")
+  }
+
+  /** Combined whole-file splits over the input paths, listed once: a
+    * literal path by one status lookup (no glob parse, so no character in
+    * a journal name is special), a glob by one `globStatus`. Hidden names
+    * (`_`, `.`) are skipped as `FileInputFormat` skips them. The split
+    * budget is total bytes / min partitions, as in `wholeTextFiles`.
+    */
+  private[sources] final class WholeFiles extends CombineFileInputFormat[Text, Text] {
+    private var listed: java.util.List[FileStatus] = _
+
+    override protected def listStatus(job: JobContext): java.util.List[FileStatus] = {
+      if (listed == null) {
+        val conf = job.getConfiguration
+        val literal = conf.getBoolean(WholeFiles.LiteralKey, false)
+        listed = FileInputFormat.getInputPaths(job).toSeq.flatMap { p =>
+          val fs = p.getFileSystem(conf)
+          if (literal) try Seq(fs.getFileStatus(p)) catch { case _: FileNotFoundException => Nil }
+          else Option(fs.globStatus(p)).fold(Seq.empty[FileStatus])(_.toSeq)
+        }.filter(st => st.isFile && !st.getPath.getName.matches("[_.].*")).asJava
+      }
+      listed
     }
+
+    override def getSplits(job: JobContext): java.util.List[InputSplit] = {
+      val bytes = listStatus(job).asScala.map(_.getLen).sum
+      val parts = math.max(job.getConfiguration.getInt(WholeFiles.MinPartitionsKey, 1), 1)
+      setMaxSplitSize(math.ceil(bytes.toDouble / parts).toLong)
+      super.getSplits(job)
+    }
+
+    override protected def isSplitable(context: JobContext, file: Path): Boolean = false
+
+    override def createRecordReader(split: InputSplit, context: TaskAttemptContext)
+        : RecordReader[Text, Text] =
+      new CombineFileRecordReader[Text, Text](
+        split.asInstanceOf[CombineFileSplit], context, classOf[WholeFile])
+  }
+
+  private[sources] object WholeFiles {
+    val LiteralKey = "graft.journal.literalPaths"
+    val MinPartitionsKey = "graft.journal.minPartitions"
+  }
+
+  /** One file of a combined split as one (path, contents) record. */
+  private[sources] final class WholeFile(split: CombineFileSplit, context: TaskAttemptContext,
+      index: Integer) extends RecordReader[Text, Text] {
+    private val path = split.getPath(index)
+    private var value: Text = _
+
+    override def initialize(s: InputSplit, c: TaskAttemptContext): Unit = ()
+    override def nextKeyValue(): Boolean =
+      value == null && {
+        val in = path.getFileSystem(context.getConfiguration).open(path)
+        try value = new Text(in.readAllBytes()) finally in.close()
+        true
+      }
+    override def getCurrentKey: Text = new Text(path.toString)
+    override def getCurrentValue: Text = value
+    override def getProgress: Float = if (value == null) 0f else 1f
+    override def close(): Unit = ()
   }
 
   /** Discovered tenants: directories matching `t_.+` under the root.
@@ -107,7 +187,7 @@ object Journal {
     * listing and would scan unbounded snapshot history.
     */
   def accounts(spark: SparkSession, root: String): DataFrame =
-    parseAccounts(safeWholetext(spark, s"$root/t_*/account/*/snapshot/0000000000"))
+    parseAccounts(globWholetext(spark, s"$root/t_*/account/*/snapshot/0000000000"))
 
   /** Snapshot-header parse on a raw (value, path) frame — shared by the
     * glob reader above and the compacted-manifest reader.
@@ -132,7 +212,7 @@ object Journal {
     * Ref: PrimaryPersistence.scala:124-164 (S4).
     */
   def events(spark: SparkSession, root: String): DataFrame =
-    parseEvents(safeWholetext(spark, s"$root/t_*/account/*/events/*/*"))
+    parseEvents(globWholetext(spark, s"$root/t_*/account/*/events/*/*"))
 
   /** Event filename/content parse on a raw (value, path) frame — shared by
     * the glob reader above and the compacted-manifest reader.
@@ -164,7 +244,28 @@ object Journal {
     * remaining lines — same semantics, no state, fully parallel.
     */
   def transfers(spark: SparkSession, root: String): DataFrame =
-    parseTransfers(safeWholetext(spark, s"$root/t_*/transaction/*"))
+    parseTransfers(globWholetext(spark, s"$root/t_*/transaction/*"))
+
+  /** Transfers of the named transactions only: for each (tenant,
+    * transaction) pair the one file `t_<tenant>/transaction/<transaction>`,
+    * read once — what an incremental sync pass needs, instead of every
+    * transaction file of the journal. A named file that does not exist
+    * contributes nothing, as it would to the glob read above.
+    *
+    * The cost is per name, on the driver: one status lookup per file (a
+    * metadata request each on s3a/hdfs) and every path in the read's
+    * Hadoop job configuration. That suits a delta; a read naming most of
+    * the journal (an initial sync) pays it for every transaction.
+    */
+  def transfersOf(spark: SparkSession, root: String, txs: Seq[(String, String)]): DataFrame =
+    parseTransfers(transactionFiles(spark, root, txs))
+
+  private def transactionRel(tx: (String, String)): String = s"t_${tx._1}/transaction/${tx._2}"
+
+  private def transactionFiles(spark: SparkSession, root: String,
+      txs: Seq[(String, String)]): DataFrame =
+    wholeFiles(spark, txs.map(tx => new Path(s"$root/${transactionRel(tx)}")), literal = true,
+      name = s"$root/t_*/transaction/ (${txs.size} named)")
 
   /** Transaction-file parse on a raw (value, path) frame — shared by the
     * batch reader above and the Structured Streaming source
@@ -246,7 +347,7 @@ object Journal {
   /** One entity kind's live raw (value, relative path) rows. */
   private def rawLive(spark: SparkSession, root: String, kind: String): DataFrame = {
     val rel = relativizer(spark, root)
-    safeWholetext(spark, s"$root/${kindGlobs(kind)}")
+    globWholetext(spark, s"$root/${kindGlobs(kind)}")
       .withColumn("path", rel(col("path")))
   }
 
@@ -302,6 +403,17 @@ object Journal {
   def eventsHybrid(spark: SparkSession, root: String, manifestDir: String): DataFrame =
     parseEvents(hybridRaw(spark, root, manifestDir, "event"))
 
-  def transfersHybrid(spark: SparkSession, root: String, manifestDir: String): DataFrame =
-    parseTransfers(hybridRaw(spark, root, manifestDir, "transaction"))
+  /** [[transfersOf]] over manifest history ∪ live tail: both sides hold
+    * only the named transaction files, deduplicated by file like every
+    * hybrid read.
+    */
+  def transfersOfHybrid(spark: SparkSession, root: String, manifestDir: String,
+      txs: Seq[(String, String)]): DataFrame = {
+    val rel = relativizer(spark, root)
+    parseTransfers(transactionFiles(spark, root, txs)
+      .withColumn("path", rel(col("path")))
+      .unionByName(manifest(spark, manifestDir, "transaction")
+        .filter(col("path").isin(txs.map(transactionRel): _*)))
+      .dropDuplicates("path"))
+  }
 }

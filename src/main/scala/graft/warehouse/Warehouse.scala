@@ -1,9 +1,9 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** The warehouse core: idempotent merge primitives and the derived
   * balance-change table.
@@ -143,6 +143,28 @@ object Warehouse {
       .join(keys.select(col("tenant"), col("name")).distinct(),
         Seq("tenant", "name"), "left_semi"))
 
+  /** The schemas of the tables [[sync]] writes, as Spark reads them back
+    * (every column nullable). Readers pass them to `spark.read.schema`, so
+    * opening a table lists its files and runs no schema-inference job.
+    * SyncSpec pins them to what a sync pass actually writes.
+    */
+  val tableSchemas: Map[String, StructType] = {
+    def cols(names: String*)(t: DataType) = names.map(StructField(_, t))
+    Map(
+      "tenant" -> StructType(cols("name")(StringType)),
+      "account" -> StructType(cols("tenant", "name", "currency", "format")(StringType) ++
+        cols("last_syn_snapshot", "last_syn_event")(IntegerType)),
+      "transfer" -> StructType(cols("tenant", "transaction", "transfer")(StringType) ++
+        cols("status")(IntegerType) ++
+        cols("credit_tenant", "credit_name", "debit_tenant", "debit_name")(StringType) ++
+        cols("amount")(DecimalType(38, 18)) ++ cols("currency")(StringType) ++
+        cols("value_date")(TimestampType)))
+  }
+
+  /** The file in each balance-MV version naming the transfer-table files
+    * it was computed from. */
+  private val MvSourcesFile = "_transfer_files"
+
   /** One incremental ETL pass: journal → warehouse tables, idempotently
     * merged into `warehouseDir` (parquet dirs tenant/account/transfer).
     * Re-running on an unchanged journal is a no-op (T6 effectively-once).
@@ -152,12 +174,31 @@ object Warehouse {
     *   1. tenants + newly-discovered accounts insert-only (S7/S8-insert);
     *   2. events past each account's watermark (P8: snapshot_version ≥
     *      last_syn_snapshot, version > last_syn_event);
-    *   3. transfers of those events' transactions, kept only where the
-    *      event's account is the credit or debit party (P6, ref :215-218),
-    *      with the transfer-status-vs-event-status assertion (P7, :219-226);
+    *   3. the transactions those events announce, read BY NAME
+    *      (`t_<tenant>/transaction/<transaction>`, each file once; no other
+    *      transaction file is listed or read), their transfers kept only
+    *      where the event's account is the credit or debit party (P6, ref
+    *      :215-218), with the transfer-status-vs-event-status assertion
+    *      (P7, :219-226) evaluated in the same read; skipped when no event
+    *      announces anything (a first pass then writes the empty table);
     *   4. new transfers appended (anti-join on key, J3/E1);
     *   5. account watermarks advanced via keep-latest upsert (T3, :260-264)
-    *      with the (last_syn_snapshot, last_syn_event) version tie-break.
+    *      with the (last_syn_snapshot, last_syn_event) version tie-break;
+    *   6. the balance MV republished when its CURRENT version does not
+    *      cover the transfer table's files (this pass appended, or a
+    *      previous one stopped between steps 4 and 6).
+    *
+    * Event and snapshot reads stay O(journal): an event's version lives in
+    * the file's contents, so finding the events past a watermark reads
+    * every event file. Warehouse tables are opened with
+    * [[tableSchemas]], so no pass runs a schema-inference job.
+    *
+    * Step 3's cost follows the announced transactions, which on the
+    * initial pass are all of them: the pairs are collected to the driver,
+    * each named file is looked up by one status call on the driver (on
+    * s3a/hdfs, one metadata request per file), and every path travels in
+    * the read's Hadoop job configuration. An incremental pass pays this
+    * for its delta only.
     *
     * At 100 TB the tables would be `partitionBy("tenant")` so tenant-scoped
     * queries prune partitions, and the account-table rewrite in step 5 would
@@ -166,9 +207,9 @@ object Warehouse {
     * still reads the old files).
     */
   def sync(spark: SparkSession, journalRoot: String, warehouseDir: String,
-           partitionByTenant: Boolean = false,
            metrics: graft.metrics.MetricsEmitter = graft.metrics.MetricsEmitter.Disabled,
            manifestDir: Option[String] = None): SyncStats = {
+    import graft.operators.VersionedRoot
     import graft.sources.Journal
     import org.apache.spark.sql.Observation
 
@@ -200,18 +241,28 @@ object Warehouse {
       // crashed publish leaves an orphan claim the next publish skips
     }
 
-    def readOr(name: String, empty: => DataFrame): DataFrame = {
+    // a warehouse table with its known schema (no inference job), or an
+    // empty one before its first write
+    def table(name: String): DataFrame = {
       val p = tablePath(name)
-      if (p.getFileSystem(hconf).exists(p)) spark.read.parquet(p.toString)
-      else empty
+      if (p.getFileSystem(hconf).exists(p)) spark.read.schema(tableSchemas(name)).parquet(p.toString)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), tableSchemas(name))
+    }
+
+    // the transfer table's data files, one name per line: what the balance
+    // MV must cover (a file listing, no Spark job)
+    def transferFiles(): String = {
+      val p = tablePath("transfer")
+      val fs = p.getFileSystem(hconf)
+      if (!fs.exists(p)) ""
+      else fs.listStatus(p).map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.mkString("\n")
     }
 
     // A2 discovery counters: observe the merge write itself (no extra pass)
-    def append(df: DataFrame, name: String, parts: Seq[String]): Long = {
+    def append(df: DataFrame, name: String): Long = {
       val obs = Observation()
-      val w = df.observe(obs, count(lit(1)).as("n")).write.mode("append")
-      (if (partitionByTenant && parts.nonEmpty) w.partitionBy(parts: _*) else w)
-        .parquet(s"$warehouseDir/$name")
+      df.observe(obs, count(lit(1)).as("n")).write.mode("append").parquet(s"$warehouseDir/$name")
       obs.get("n").asInstanceOf[Long]
     }
 
@@ -220,14 +271,10 @@ object Warehouse {
     val accounts = entity(Journal.accounts(spark, journalRoot),
       Journal.accountsHybrid(spark, journalRoot, _))
 
-    val nTenants =
-      append(newRows(tenants, readOr("tenant", tenants.limit(0)), Seq("name")),
-        "tenant", Seq.empty)
-    val nAccounts =
-      append(newRows(accounts, readOr("account", accounts.limit(0)), Seq("tenant", "name")),
-        "account", Seq("tenant"))
+    val nTenants = append(newRows(tenants, table("tenant"), Seq("name")), "tenant")
+    val nAccounts = append(newRows(accounts, table("account"), Seq("tenant", "name")), "account")
 
-    val accountTable = readOr("account", accounts.limit(0))
+    val accountTable = table("account")
 
     // P8: watermark filter — events already mirrored are skipped. Event
     // versions restart per snapshot (ref :157-158), so the version guard
@@ -243,28 +290,53 @@ object Warehouse {
           col("version") > col("last_syn_event")))
       .cache()
 
-    // Transfers of non-pending events' transactions, P6 ownership-filtered:
-    // the announcing account must be one side of the transfer.
-    val announced = events.filter(col("status") =!= 0)
+    // Non-pending events announce their transactions; only those files are
+    // read, each once, however many accounts announce it. The same job
+    // tells whether the pass found any new event (step 5's condition).
+    val announces = coalesce(col("status") =!= 0, lit(false))
+    val announced = events.filter(announces)
       .select(col("tenant"), col("account"), col("transaction"),
         col("status").as("event_status"))
-    val txTransfers = entity(Journal.transfers(spark, journalRoot),
-      Journal.transfersHybrid(spark, journalRoot, _))
-      .join(announced, Seq("tenant", "transaction"))
-      .filter(col("credit_name") === col("account") ||
-        col("debit_name") === col("account"))
-
-    // P7: a transfer whose parsed status disagrees with its announcing
-    // event's status is journal corruption — fail the pass (ref :219-226).
-    val mismatches = txTransfers.filter(col("status") =!= col("event_status")).count()
-    if (mismatches > 0)
-      throw new IllegalStateException(
-        s"$mismatches transfer(s) with status differing from their announcing event")
-
-    val discovered = txTransfers.drop("account", "event_status")
+    val newEvents = events.select(col("tenant"), col("transaction"), announces).distinct().collect()
+    val txs = newEvents.filter(_.getBoolean(2)).map(r => (r.getString(0), r.getString(1))).toSeq
     val nTransfers =
-      append(newRows(discovered, readOr("transfer", discovered.limit(0)),
-        Seq("tenant", "transaction", "transfer")), "transfer", Seq("tenant"))
+      if (txs.isEmpty) {
+        // nothing to read; the first pass still creates the (empty) table,
+        // so every pass leaves all three tables for readers to open
+        if (!tablePath("transfer").getFileSystem(hconf).exists(tablePath("transfer")))
+          table("transfer").write.parquet(s"$warehouseDir/transfer")
+        0L
+      } else {
+        // P6: the announcing account must be one side of the transfer. P7:
+        // a transfer whose parsed status disagrees with its announcing
+        // event's status is journal corruption — fail the pass (ref
+        // :219-226). The check is observed on the one read of the files,
+        // which the append then reuses from the local checkpoint (not a
+        // cache: the append's stages then carry no journal-read lineage).
+        val p7 = Observation()
+        val txTransfers = entity(Journal.transfersOf(spark, journalRoot, txs),
+          Journal.transfersOfHybrid(spark, journalRoot, _, txs))
+          .join(announced, Seq("tenant", "transaction"))
+          .filter(col("credit_name") === col("account") ||
+            col("debit_name") === col("account"))
+          .observe(p7, count(when(col("status") =!= col("event_status"), 1)).as("n"))
+          .localCheckpoint()
+        try {
+          val mismatches = p7.get("n").asInstanceOf[Long]
+          if (mismatches > 0)
+            throw new IllegalStateException(
+              s"$mismatches transfer(s) with status differing from their announcing event")
+          append(newRows(txTransfers.drop("account", "event_status"), table("transfer"),
+            Seq("tenant", "transaction", "transfer")), "transfer")
+        } finally {
+          // the checkpoint's blocks are this pass's alone: release them now,
+          // not at the driver's next GC-triggered cleanup (Spark logs a
+          // warning that the released RDD cannot be recomputed)
+          txTransfers.queryExecution.analyzed
+            .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+            .foreach(_.unpersist(blocking = false))
+        }
+      }
 
     // T3: advance per-account watermarks through the keep-latest upsert.
     // The new watermark is the lexicographic max of (snapshot, version) —
@@ -276,7 +348,7 @@ object Warehouse {
       .select(col("tenant"), col("name"),
         col("__m.snapshot_version").as("last_syn_snapshot"),
         col("__m.version").as("last_syn_event"))
-    if (!marks.isEmpty) {
+    if (newEvents.nonEmpty) {
       val updated = accountTable
         .join(marks, Seq("tenant", "name"), "left_semi")
         .drop("last_syn_snapshot", "last_syn_event")
@@ -290,9 +362,7 @@ object Warehouse {
       // either `account` or `account_old` intact (recovered at pass start);
       // a table format (Delta/Iceberg MERGE) is the real answer at scale.
       val fs = tablePath("account").getFileSystem(hconf)
-      val w = merged.write.mode("overwrite")
-      (if (partitionByTenant) w.partitionBy("tenant") else w)
-        .parquet(s"$warehouseDir/account_new")
+      merged.write.mode("overwrite").parquet(s"$warehouseDir/account_new")
       fs.rename(tablePath("account"), tablePath("account_old"))
       fs.rename(tablePath("account_new"), tablePath("account"))
       fs.delete(tablePath("account_old"), true)
@@ -316,22 +386,32 @@ object Warehouse {
     // 100 TB under a transactional table format the refresh becomes the
     // q_balance_mv_incr delta MERGE, whose cost is this pass's appended
     // transfers, not the lake.
-    locally {
-      import graft.operators.VersionedRoot
-      val (mvStore, mvRoot) = Warehouse.balancesRoot(warehouseDir)
-      if (nTransfers > 0 || !VersionedRoot.publishedAt(mvStore, mvRoot)) {
-        // the refresh MUST NOT be answered by the very rule it feeds: on
-        // a serving session the installed rewrite matches this exact
-        // aggregate and would publish a copy of the OLD version
-        graft.plans.BalanceMvRewrite.suppressed {
-          VersionedRoot.publishAt(mvStore, mvRoot, vdir =>
-            balancePreAgg(readOr("transfer", discovered.limit(0)))
-              .write.mode("overwrite").parquet(vdir)): Unit
-        }
-        val keep = spark.conf
-          .get("spark.graft.balance.mvKeepVersions", "2").toInt
-        VersionedRoot.retireAt(mvStore, mvRoot, keep = keep)
+    //
+    // Each version records the transfer-table files it was computed from,
+    // and a pass republishes whenever CURRENT's record differs from the
+    // table's files now. Any append adds a file (even a 0-row one: Spark
+    // writes an empty parquet file), and so does the append of a previous
+    // pass that stopped before this point, after or before its account
+    // swap. A pass that appended nothing leaves the list as it was.
+    val (mvStore, mvRoot) = balancesRoot(warehouseDir)
+    val sources = transferFiles()
+    val mvCurrent = VersionedRoot.publishedAt(mvStore, mvRoot) && {
+      val recorded = mvStore.child(VersionedRoot.resolveAt(mvStore, mvRoot), MvSourcesFile)
+      mvStore.exists(recorded) && mvStore.readString(recorded) == sources
+    }
+    if (!mvCurrent) {
+      // the refresh MUST NOT be answered by the very rule it feeds: on
+      // a serving session the installed rewrite matches this exact
+      // aggregate and would publish a copy of the OLD version
+      graft.plans.BalanceMvRewrite.suppressed {
+        VersionedRoot.publishAt(mvStore, mvRoot, { vdir =>
+          balancePreAgg(table("transfer")).write.mode("overwrite").parquet(vdir)
+          mvStore.writeString(mvStore.child(vdir, MvSourcesFile), sources)
+        }): Unit
       }
+      val keep = spark.conf
+        .get("spark.graft.balance.mvKeepVersions", "2").toInt
+      VersionedRoot.retireAt(mvStore, mvRoot, keep = keep)
     }
     events.unpersist()
     // A2 transport: the observed counters leave the process in the

@@ -424,4 +424,58 @@ class HttpEdgeSpec extends SparkSpec {
       edge.stop()
     }
   }
+
+  test("refresh() opens the tables without a schema job; a missing table fails start()") {
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, fixture(), wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == "sentinel"))
+          done.countDown()
+        else js.stageInfos.foreach(si => stages.add(si.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      edge.refresh()
+      val (c, _) = get(edge.boundPort, "/tenants")
+      assert(c == 200)
+      // a sentinel job after the refresh and the request: the bus delivers
+      // in order, so every job they ran is recorded once it arrives
+      spark.sparkContext.setJobDescription("sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      val schemaJobs = stages.asScala.filter(_.startsWith("parquet at"))
+      assert(schemaJobs.isEmpty, s"schema-inference jobs: $schemaJobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      edge.stop()
+    }
+
+    // a warehouse without its tables is refused up front, not per request
+    val empty = new HttpEdge(spark, Files.createTempDirectory("wh-none").toString, port = 0)
+    try intercept[org.apache.spark.sql.AnalysisException](empty.start())
+    finally empty.stop()
+  }
+
+  test("a first sync with no announced transaction leaves tables the edge serves") {
+    // a fresh deployment: accounts, and only a pending event, so the pass
+    // reads no transaction file
+    val root = Files.createTempDirectory("journal")
+    put(root, "t_TENANT/account/CREDIT/snapshot/0000000000", "CZK FORMAT_T\n")
+    put(root, "t_TENANT/account/DEBIT/snapshot/0000000000", "CZK FORMAT_T\n")
+    put(root, "t_TENANT/account/CREDIT/events/0000000000/0_1_TRN", "1\n")
+    val wh = Files.createTempDirectory("wh").toString
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(1, 2, 0))
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    try {
+      val (c, body) = get(edge.boundPort, "/account?tenant=TENANT&name=CREDIT")
+      assert(c == 200 && body.contains("\"balance\":0"), body)
+      val (tc, transfers) = get(edge.boundPort, "/transfers?tenant=TENANT")
+      assert(tc == 200 && transfers == "[]", transfers)
+    } finally edge.stop()
+  }
 }

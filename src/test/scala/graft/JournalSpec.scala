@@ -196,6 +196,6 @@ class JournalSpec extends SparkSpec {
     // per-file dedupe keeps one copy of the FILE, both records survive —
     // exactly what a plain full-tree read returns
     assert(Journal.transfers(spark, root.toString).count() == 2)
-    assert(Journal.transfersHybrid(spark, root.toString, m).count() == 2)
+    assert(Journal.transfersOfHybrid(spark, root.toString, m, Seq(("T", "DUP"))).count() == 2)
   }
 }

@@ -16,7 +16,9 @@ quartiles, the median B/A ratio over the pairs and how many pairs B won
 (direction from BENCHMARK.json). "gain" marks a metric where B won at least
 nine tenths of the pairs and the medians differ by more than A's
 interquartile range. A run that fails or answers wrong is reported and its
-pair left out. --out appends one JSON line per run.
+pair left out. --out appends one JSON line per run. With --trace 1 each pair
+is followed by perfbench/diff_counters.py over that seed's A and B result
+files: the counters that do not depend on the machine, A -> B.
 """
 import argparse
 import json
@@ -47,6 +49,15 @@ def run(checkout, args, seed):
                "error": (p.stderr or p.stdout)[-500:]}
     res["exit"] = p.returncode
     return res
+
+
+def diff_counters(dirs, workload, seed):
+    result = os.path.join(".bench_build", "perfbench", "results", f"{workload}-seed{seed}-trace1.json")
+    p = subprocess.run(
+        [sys.executable, os.path.join(dirs["A"], "perfbench", "diff_counters.py"),
+         os.path.join(dirs["A"], result), os.path.join(dirs["B"], result)],
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
+    print(f"  counters A -> B:\n" + "".join(f"    {line}\n" for line in p.stdout.splitlines()), end="", flush=True)
 
 
 def better(checkout):
@@ -86,6 +97,8 @@ def main():
         shown = " ".join(f"{k}={got['A']['metrics'][k]['value']:.4g}->{v['value']:.4g}"
                          for k, v in got["B"]["metrics"].items() if k in got["A"]["metrics"])
         print(f"seed {seed} ({order}): {shown}", flush=True)
+        if args.trace:
+            diff_counters(dirs, args.workload, seed)
 
     if not pairs:
         sys.exit("no complete pair")
