@@ -27,6 +27,10 @@ import org.apache.spark.sql.functions._
   *
   * Routes:
   *   GET /health                             → {"healthy":bool,"graphql":bool}
+  *   GET /metrics                            → {"answers","chars": stored by
+  *       the current snapshot; "hits","misses": answer lookups since
+  *       start(); "stale_refreshes": refreshes a request forced because a
+  *       sync pass removed files the snapshot pinned} — counters, no Spark job
   *   GET /tenants?limit=&offset=
   *   GET /tenant?name=
   *   GET /accounts?tenant=&currency=&format=&limit=&offset=
@@ -43,8 +47,16 @@ import org.apache.spark.sql.functions._
   * SparkSession. Contract: a request sees the warehouse as of the last
   * start()/refresh() — see the snapshot note below; call refresh() after
   * a sync pass to serve what it wrote.
+  *
+  * `answerBudget` is the snapshot's character budget for stored answers;
+  * the public constructor fixes it at HttpEdge.AnswerBudgetChars, and only
+  * tests pass a smaller one.
   */
-final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
+final class HttpEdge private[graft] (spark: SparkSession, warehouseDir: String, port: Int,
+    answerBudget: Long) {
+
+  def this(spark: SparkSession, warehouseDir: String, port: Int) =
+    this(spark, warehouseDir, port, HttpEdge.AnswerBudgetChars)
 
   // ---- snapshot --------------------------------------------------------
   //
@@ -52,15 +64,14 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   // tenant/account/transfer relations (one file listing each, read with the
   // schemas sync writes: no schema job), the GraphQL executor
   // over them, the balance-MV rewrite bound to the MV version CURRENT then,
-  // and one LRU of answers. The LRU memoizes, per normalized (route, args)
-  // key, the FINAL Dataset a request collects — a REST route's toJSON
-  // Dataset, a GraphQL request's compiled root plans — so a hit skips
-  // parsing, analysis, optimization and physical planning and re-executes
-  // the already-executed plan: the exchanges its first run materialized
-  // (shuffles, broadcasts) are reused, which leaves about one Spark job
-  // per hit — the analog of the reference preparing a statement once
-  // (GraphQLPersistence.scala:149-368). An answer is stored only after it
-  // first succeeded.
+  // and one LRU of answers. The snapshot pins its file listings and its MV
+  // version, so the answer to a normalized (route, args) key cannot change
+  // during the snapshot's life: the LRU maps each key to its response body,
+  // and a hit is a map lookup that runs no Spark job. An answer is stored
+  // only after it succeeded. The LRU holds at most MaxAnswers entries and
+  // answerBudget characters of keys and bodies: it evicts the least
+  // recently used entries until both fit, and an answer larger than the
+  // whole budget is returned but not stored (a page can be a whole table).
   private final class Snapshot {
     private def table(name: String) =
       spark.read.schema(Warehouse.tableSchemas(name)).parquet(s"$warehouseDir/$name")
@@ -84,31 +95,44 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
         Warehouse.balances(Warehouse.balanceChanges(transfer))))
     }
 
-    private val answers =
-      new java.util.LinkedHashMap[String, () => String](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[String, () => String]): Boolean =
-          size > 256
-      }
+    // access-ordered: iteration starts at the least recently used entry
+    private val answers = new java.util.LinkedHashMap[String, String](64, 0.75f, true)
+    private var chars = 0L // key + body characters stored; guarded by answers
 
-    def cached: Int = answers.synchronized(answers.size)
+    /** (answers stored, characters stored) */
+    def stored: (Int, Long) = answers.synchronized((answers.size, chars))
 
-    def answer(key: String)(build: => () => String): String = {
+    def answer(key: String)(build: => String): String = {
       val hit = answers.synchronized(answers.get(key))
-      if (hit != null) hit()
+      if (hit != null) { hits.incrementAndGet(); hit }
       else {
-        val run = build // build outside the lock: analysis may take ms
-        val body = run()
-        answers.synchronized(answers.put(key, run))
+        misses.incrementAndGet()
+        val body = build // outside the lock: a miss runs Spark jobs
+        val size = key.length.toLong + body.length
+        if (size <= answerBudget) answers.synchronized {
+          val old = answers.put(key, body)
+          chars += size - (if (old == null) 0 else key.length + old.length)
+          val lru = answers.entrySet.iterator
+          while (answers.size > HttpEdge.MaxAnswers || chars > answerBudget) {
+            val e = lru.next()
+            chars -= e.getKey.length + e.getValue.length
+            lru.remove()
+          }
+        }
         body
       }
     }
   }
 
   @volatile private var snap: Snapshot = _
+  private val hits = new java.util.concurrent.atomic.AtomicLong
+  private val misses = new java.util.concurrent.atomic.AtomicLong
+  private val staleRefreshes = new java.util.concurrent.atomic.AtomicLong
 
-  /** Cached-answer count of the current snapshot (bounded at 256) —
-    * exposed for tests/monitoring. */
-  def cachedPlans: Int = Option(snap).fold(0)(_.cached)
+  /** Stored-answer count of the current snapshot (at most
+    * HttpEdge.MaxAnswers; an answer over the character budget is not
+    * stored) — exposed for tests/monitoring, as is GET /metrics. */
+  def cachedPlans: Int = Option(snap).fold(0)(_.stored._1)
 
   /** Serve the current warehouse from now on: one atomic swap to a new
     * snapshot (fresh table listings, the balance MV's CURRENT pointer
@@ -122,17 +146,19 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   /** Answer `key` from the current snapshot. A sync pass replaces the
     * account table (write-new-then-swap) and retires old MV versions, so
     * files a snapshot pinned can vanish before the next refresh(); an
-    * answer that fails on them refreshes once (unless a concurrent request
-    * already did) and is built again on the new snapshot. A hit whose
-    * re-run reads only reused exchange output still answers from its own
-    * snapshot, as the contract says.
+    * answer whose build fails on them refreshes once (unless a concurrent
+    * request already did) and is built again on the new snapshot. A stored
+    * answer reads no file, so it stays its snapshot's answer until
+    * refresh(), as the contract says.
     */
-  private def serve(key: String)(build: Snapshot => () => String): String = {
+  private def serve(key: String)(build: Snapshot => String): String = {
     val s = snap
     try s.answer(key)(build(s))
     catch {
       case e: Throwable if filesGone(e) =>
-        synchronized { if (snap eq s) refresh() }
+        synchronized {
+          if (snap eq s) { refresh(); staleRefreshes.incrementAndGet() }
+        }
         val fresh = snap
         fresh.answer(key)(build(fresh))
     }
@@ -189,10 +215,11 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
   def boundPort: Int = server.getAddress.getPort
 
   private def params(ex: HttpExchange): Map[String, String] = {
+    def decode(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
     val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
     q.split("&").filter(_.contains("=")).map { kv =>
       val Array(k, v) = kv.split("=", 2)
-      k -> java.net.URLDecoder.decode(v, "UTF-8")
+      decode(k) -> decode(v)
     }.toMap
   }
 
@@ -214,15 +241,12 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
           respond(ex, 500, s"""{"error":${GraphQL.jstr(e.toString)}}""")
       })
 
-  /** A cached REST route: the answer is the toJSON Dataset of the frame
-    * `df` builds on the snapshot, collected into a JSON array per request.
+  /** A cached REST route: the answer is the frame `df` builds on the
+    * snapshot, collected as a JSON array.
     */
   private def rest(path: String)(df: (Snapshot, Map[String, String]) => DataFrame): Unit =
     handle(path) { p =>
-      serve(cacheKey(path, p)) { s =>
-        val rows = df(s, p).toJSON
-        () => rows.collect().mkString("[", ",", "]")
-      }
+      serve(cacheKey(path, p))(s => df(s, p).toJSON.collect().mkString("[", ",", "]"))
     }
 
   private def required(p: Map[String, String], k: String): String =
@@ -248,9 +272,8 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     * JSON body {query, operationName, variables} (array-wrapped bodies
     * accepted, :38-44) and GET /graphql?query=&operation=. Error mapping
     * follows RootRouter.scala:22-41 — syntax errors and query-analysis
-    * errors are 400s carrying the source position. Compiled root plans
-    * share the snapshot's answer cache, keyed per (document, operation,
-    * variables).
+    * errors are 400s carrying the source position. Responses share the
+    * snapshot's answer cache, keyed per (document, operation, variables).
     */
   private def handleGraphql(ex: HttpExchange): Unit =
     try {
@@ -270,10 +293,8 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
       val key = cacheKey("/graphql",
         vars.map { case (k, v) => s"var.$k" -> String.valueOf(v) } ++
           Map("query" -> query, "operation" -> opName.getOrElse("")))
-      respond(ex, 200, serve(key) { s =>
-        val plans = s.graphql.plans(query, opName, vars)
-        () => s.graphql.renderResponse(plans)
-      })
+      respond(ex, 200,
+        serve(key)(s => s.graphql.renderResponse(s.graphql.plans(query, opName, vars))))
     } catch {
       case GraphQL.SyntaxError(msg, line, col) =>
         respond(ex, 400,
@@ -292,9 +313,9 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
     * body contributes its first element (GraphQLRouter.scala:38-44).
     */
   private def parseGraphqlBody(body: String): (String, Option[String], Map[String, Any]) = {
-    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import com.fasterxml.jackson.databind.JsonNode
     val root =
-      try new ObjectMapper().readTree(body)
+      try HttpEdge.Json.readTree(body)
       catch { case e: Exception =>
         throw new IllegalArgumentException(s"request body is not JSON: ${e.getMessage}") }
     val obj = if (root != null && root.isArray && root.size > 0) root.get(0) else root
@@ -349,6 +370,11 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
 
 
   def start(): HttpEdge = {
+    handle("/metrics") { _ =>
+      val (answers, chars) = snap.stored
+      s"""{"answers":$answers,"chars":$chars,"hits":${hits.get},""" +
+        s""""misses":${misses.get},"stale_refreshes":${staleRefreshes.get}}"""
+    }
     handle("/health") { _ =>
       val ok =
         try Api.tenants(snap.tenant, limit = 1, offset = 0).count() >= 0
@@ -486,6 +512,15 @@ final class HttpEdge(spark: SparkSession, warehouseDir: String, port: Int) {
 }
 
 object HttpEdge {
+  /** Most answers one snapshot stores. */
+  val MaxAnswers = 256
+
+  /** Most characters (keys + bodies) one snapshot stores: 32 MiB. */
+  val AnswerBudgetChars: Long = 32L << 20
+
+  /** readTree is thread-safe: one mapper serves every POST. */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Minimal self-contained query console (the reference ships GraphiQL,
     * GraphQLRouter.scala:66-73; this needs no bundled JS assets).
     */

@@ -55,6 +55,13 @@ class HttpEdgeSpec extends SparkSpec {
   private def gql(port: Int, doc: String): (Int, String) =
     get(port, "/graphql?query=" + java.net.URLEncoder.encode(doc, "UTF-8"))
 
+  /** GET /metrics as name -> count. */
+  private def metrics(port: Int): Map[String, Long] = {
+    val (c, body) = get(port, "/metrics")
+    assert(c == 200, body)
+    "\"(\\w+)\":(\\d+)".r.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toLong).toMap
+  }
+
   private def withEdge[A](f: Int => A): A = {
     val wh = Files.createTempDirectory("wh").toString
     Warehouse.sync(spark, fixture(), wh)
@@ -81,6 +88,8 @@ class HttpEdgeSpec extends SparkSpec {
       // scenario 3: committed transfer -> +1/-1 balances, status word
       val (_, credit) = get(port, "/account?tenant=TENANT&name=CREDIT")
       assert(credit.contains("\"balance\":1.0"))
+      // parameter names are URL-decoded like their values (%74 = 't')
+      assert(get(port, "/account?%74enant=TENANT&name=CREDIT") == (200, credit))
       val (_, transfers) = get(port, "/transfers?tenant=TENANT&status=committed&resolve=true")
       assert(transfers.contains("\"transaction\":\"TRN\""))
       assert(transfers.contains("\"status_word\":\"committed\""))
@@ -321,16 +330,16 @@ class HttpEdgeSpec extends SparkSpec {
       assert(balances(gql(port, nested)) == Set("1", "-1"))
 
       // pass 2 (+2) swaps the account table out from under the snapshot.
-      // Cached shapes answer 200 from one state: their executed plan's
-      // reused exchange output (the snapshot, pre-pass), or — when the
-      // re-run reads the swapped files — a refreshed snapshot (post-pass)
+      // Stored answers read no file: they answer the snapshot, pre-pass
       addTransfer(journal, 2, 2)
       Warehouse.sync(spark, journal, wh)
-      assert(Set(Set("1.0"), Set("3.0"))(balances(get(port, credit))))
-      assert(Set(Set("1", "-1"), Set("3", "-3"))(balances(gql(port, nested))))
+      assert(balances(get(port, credit)) == Set("1.0"))
+      assert(balances(gql(port, nested)) == Set("1", "-1"))
+      assert(metrics(port)("stale_refreshes") == 0)
       // a shape first seen now reads the swapped files: refresh, post-pass;
-      // the refreshed snapshot serves the cached shapes post-pass too
+      // the refreshed snapshot serves the other shapes post-pass too
       assert(balances(get(port, "/account?tenant=TENANT&name=DEBIT")) == Set("-3.0"))
+      assert(metrics(port)("stale_refreshes") == 1)
       assert(balances(get(port, credit)) == Set("3.0"))
       assert(balances(gql(port, nested)) == Set("3", "-3"))
 
@@ -342,6 +351,7 @@ class HttpEdgeSpec extends SparkSpec {
         Set("-7"))
       assert(balances(get(port, credit)) == Set("7.0"))
       assert(balances(gql(port, nested)) == Set("7", "-7"))
+      assert(metrics(port)("stale_refreshes") == 2)
     } finally edge.stop()
   }
 
@@ -359,20 +369,33 @@ class HttpEdgeSpec extends SparkSpec {
       }
       val cachedShape = "/transfers?tenant=TENANT"
       val newShape = "/transfers?tenant=TENANT&limit=50"
+      val credit = "/account?tenant=TENANT&name=CREDIT"
+      val report = "/balances?tenant=TENANT"
+      val doc = """{ account(tenant: "TENANT", name: "CREDIT") { balance } }"""
       assert(transactions(cachedShape) == Seq("TRN"))
+      val stored = Seq(get(port, credit), get(port, report), gql(port, doc))
+      assert(stored.forall(_._1 == 200) && stored.head._2.contains("\"balance\":1.0"), stored)
       addTransfer(journal, 2, 2)
       Warehouse.sync(spark, journal, wh)
       // the pass appended TRN2, but the snapshot pinned the listing of
       // start(): the cached shape and a shape built after the pass agree
       assert(transactions(cachedShape) == Seq("TRN"))
       assert(transactions(newShape) == Seq("TRN"))
+      // the pass also swapped the account table and published a new MV
+      // version: stored answers stay the snapshot's, as hits
+      val hits = metrics(port)("hits")
+      assert(Seq(get(port, credit), get(port, report), gql(port, doc)) == stored)
+      assert(metrics(port)("hits") == hits + 3)
       edge.refresh()
       assert(transactions(cachedShape) == Seq("TRN", "TRN2"))
       assert(transactions(newShape) == Seq("TRN", "TRN2"))
+      assert(get(port, credit)._2.contains("\"balance\":3.0"))
+      assert(get(port, report)._2.contains("\"balance\":3.0"))
+      assert(gql(port, doc)._2.contains("\"balance\":3"))
     } finally edge.stop()
   }
 
-  test("a cache hit runs one Spark job; no request re-reads a parquet schema") {
+  test("a cache hit runs no Spark job; no request re-reads a parquet schema") {
     val wh = Files.createTempDirectory("wh").toString
     Warehouse.sync(spark, fixture(), wh)
     val edge = new HttpEdge(spark, wh, port = 0).start()
@@ -410,11 +433,13 @@ class HttpEdgeSpec extends SparkSpec {
       val shapes = Seq[(String, () => Unit)](
         "/account" -> (() => ok("/account?tenant=TENANT&name=CREDIT")),
         "/transfers" -> (() => ok("/transfers?tenant=TENANT&status=committed&resolve=true")),
-        "graphql" -> (() => assert(gql(port, doc)._1 == 200)))
+        "graphql" -> (() => assert(gql(port, doc)._1 == 200)),
+        "/metrics" -> (() => ok("/metrics")))
       val cold = shapes.map { case (n, r) => n -> jobsOf(r()) }
+      assert(cold.toMap.apply("/metrics").isEmpty, "GET /metrics must run no Spark job")
       val hot = shapes.map { case (n, r) => n -> jobsOf(r()) }
       hot.foreach { case (n, js) =>
-        assert(js.size == 1, s"$n: a hit must re-run only the final stage, ran ${js.size} jobs: $js")
+        assert(js.isEmpty, s"$n: a hit must answer from the stored response, ran ${js.size} jobs: $js")
       }
       val schemaReads = (cold ++ hot).flatMap { case (n, js) =>
         js.flatten.filter(_.startsWith("parquet at")).map(n -> _) }
@@ -476,6 +501,50 @@ class HttpEdgeSpec extends SparkSpec {
       assert(c == 200 && body.contains("\"balance\":0"), body)
       val (tc, transfers) = get(edge.boundPort, "/transfers?tenant=TENANT")
       assert(tc == 200 && transfers == "[]", transfers)
+    } finally edge.stop()
+  }
+
+  test("GET /metrics counts stored answers, hits and misses") {
+    withEdge { port =>
+      assert(metrics(port) == Map("answers" -> 0, "chars" -> 0, "hits" -> 0,
+        "misses" -> 0, "stale_refreshes" -> 0))
+      val (_, one) = get(port, "/tenant?name=TENANT")
+      assert(get(port, "/tenant?name=TENANT")._2 == one)
+      val (_, all) = get(port, "/tenants")
+      assert(get(port, "/health")._1 == 200) // not an answer lookup
+      // stored text = normalized keys ("/tenants?" has no args) + bodies
+      assert(metrics(port) == Map("answers" -> 2,
+        "chars" -> ("/tenant?name=TENANT" + one + "/tenants?" + all).length,
+        "hits" -> 1, "misses" -> 2, "stale_refreshes" -> 0))
+      val doc = "{ tenants(limit: 10, offset: 0) { name } }"
+      assert(gql(port, doc)._1 == 200 && gql(port, doc)._1 == 200)
+      val m = metrics(port)
+      assert(m("answers") == 3 && m("hits") == 2 && m("misses") == 3, m)
+    }
+  }
+
+  test("stored answers stay within the character budget; a larger one is served, not stored") {
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, fixture(), wh)
+    val budget = 200L
+    val edge = new HttpEdge(spark, wh, port = 0, answerBudget = budget).start()
+    try {
+      val port = edge.boundPort
+      val big = "/transfers?tenant=TENANT&resolve=true"
+      val (c, body) = get(port, big)
+      assert(c == 200 && body.contains("\"credit_balance\":1.0") && body.length > budget, body)
+      assert(edge.cachedPlans == 0)
+      assert(get(port, big) == (c, body)) // built again: a miss, not a hit
+      assert(metrics(port)("hits") == 0)
+      // small answers fill the budget; the least recently used are evicted
+      // until the stored text fits, and the newest always stays
+      val names = (1 to 20).map(i => f"/tenant?name=T$i%02d")
+      names.foreach(n => assert(get(port, n) == (200, "[]")))
+      val m = metrics(port)
+      assert(m("answers") == edge.cachedPlans && edge.cachedPlans < names.size, m)
+      assert(m("chars") <= budget && m("chars") == edge.cachedPlans * (names.head + "[]").length, m)
+      get(port, names.last)
+      assert(metrics(port)("hits") == 1)
     } finally edge.stop()
   }
 }

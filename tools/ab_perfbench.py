@@ -15,8 +15,12 @@ Prints every pair's metrics and, per metric, each side's median and
 quartiles, the median B/A ratio over the pairs and how many pairs B won
 (direction from BENCHMARK.json). "gain" marks a metric where B won at least
 nine tenths of the pairs and the medians differ by more than A's
-interquartile range. A run that fails or answers wrong is reported and its
-pair left out. --out appends one JSON line per run. With --trace 1 each pair
+interquartile range. Each side's sync_reads_per_s, hot_p50_ms and
+cold_p50_ms are shown beside the metrics, read from the summary of that
+side's .bench_build/perfbench/results/<workload>-seed<N>-trace<T>.json when
+the run wrote them: the sync reader is a closed loop, so its read rate moves
+with serving latency and explains work_s moves. A run that fails or answers
+wrong is reported and its pair left out. --out appends one JSON line per run. With --trace 1 each pair
 is followed by perfbench/diff_counters.py over that seed's A and B result
 files: the counters that do not depend on the machine, A -> B.
 """
@@ -36,7 +40,15 @@ def seeds(spec):
     return out
 
 
+# summary figures shown beside the metrics, never judged
+SUMMARY = ("sync_reads_per_s", "hot_p50_ms", "cold_p50_ms")
+
+
 def run(checkout, args, seed):
+    result = os.path.join(checkout, ".bench_build", "perfbench", "results",
+                          f"{args.workload}-seed{seed}-trace{args.trace}.json")
+    if os.path.exists(result):
+        os.remove(result)  # a failed run must not show an earlier run's summary
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", args.workload, "--seed", str(seed),
          "--seconds", str(args.seconds), "--trace", str(args.trace)],
@@ -48,7 +60,18 @@ def run(checkout, args, seed):
         res = {"correct": False, "failed": None, "metrics": {},
                "error": (p.stderr or p.stdout)[-500:]}
     res["exit"] = p.returncode
+    try:
+        with open(result) as f:
+            summary = json.load(f).get("summary", {})
+    except (OSError, ValueError):
+        summary = {}
+    res["summary"] = {k: summary[k] for k in SUMMARY if isinstance(summary.get(k), (int, float))}
     return res
+
+
+def values(res):
+    """The run's metric values, then its shown summary figures."""
+    return {**{k: v["value"] for k, v in res["metrics"].items()}, **res.get("summary", {})}
 
 
 def diff_counters(dirs, workload, seed):
@@ -94,8 +117,8 @@ def main():
                   + " | ".join(str(got[s].get("error") or f"{got[s].get('failed')} wrong") for s in bad))
             continue
         pairs.append(got)
-        shown = " ".join(f"{k}={got['A']['metrics'][k]['value']:.4g}->{v['value']:.4g}"
-                         for k, v in got["B"]["metrics"].items() if k in got["A"]["metrics"])
+        a, b = values(got["A"]), values(got["B"])
+        shown = " ".join(f"{k}={a[k]:.4g}->{v:.4g}" for k, v in b.items() if k in a)
         print(f"seed {seed} ({order}): {shown}", flush=True)
         if args.trace:
             diff_counters(dirs, args.workload, seed)
@@ -112,9 +135,10 @@ def quartiles(xs):
 
 def summarize(pairs, direction):
     print(f"\n{len(pairs)} pairs; ratio = B/A, median over pairs; median [q1, q3] per side")
-    for name in sorted(set.intersection(*(set(p["A"]["metrics"]) & set(p["B"]["metrics"]) for p in pairs))):
-        a = [p["A"]["metrics"][name]["value"] for p in pairs]
-        b = [p["B"]["metrics"][name]["value"] for p in pairs]
+    vals = [(values(p["A"]), values(p["B"])) for p in pairs]
+    for name in sorted(set.intersection(*(set(a) & set(b) for a, b in vals))):
+        a = [va[name] for va, _ in vals]
+        b = [vb[name] for _, vb in vals]
         (a1, am, a3), (b1, bm, b3) = quartiles(a), quartiles(b)
         ratios = [y / x for x, y in zip(a, b) if x]
         line = (f"{name:34s} A={am:.4g} [{a1:.4g}, {a3:.4g}] B={bm:.4g} [{b1:.4g}, {b3:.4g}] "
