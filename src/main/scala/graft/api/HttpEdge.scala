@@ -88,11 +88,18 @@ final class HttpEdge private[graft] (spark: SparkSession, warehouseDir: String, 
     // Deployment contract: refresh() at least every mvKeepVersions-1 sync
     // passes, or the pinned version is vacuumed (Warehouse.sync's retire
     // knob) and its reads take the stale-file path below.
+    // The MV serves only when the pinned version was computed from exactly
+    // the transfer files this snapshot listed: a refresh between a pass's
+    // transfer append and its MV publish (a crashed pass, or the stale-file
+    // refresh meeting the pass's account swap) would otherwise pair an old
+    // MV with newer transfers, and `/balances` would disagree with
+    // `/account`. Without it, balance reports aggregate the lake.
     val mv: Option[BalanceMvRewrite] = {
       val (store, root) = Warehouse.balancesRoot(warehouseDir)
-      if (!VersionedRoot.publishedAt(store, root)) None
-      else Some(BalanceMvRewrite.forSource(spark, VersionedRoot.resolveAt(store, root),
-        Warehouse.balances(Warehouse.balanceChanges(transfer))))
+      Option.when(VersionedRoot.publishedAt(store, root))(VersionedRoot.resolveAt(store, root))
+        .filter(Warehouse.mvCovers(store, _, transfer.inputFiles.toSeq))
+        .map(BalanceMvRewrite.forSource(spark, _,
+          Warehouse.balances(Warehouse.balanceChanges(transfer))))
     }
 
     // access-ordered: iteration starts at the least recently used entry

@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, RecordReader, TaskAttemptContext}
 import org.apache.hadoop.mapreduce.lib.input.{CombineFileInputFormat, CombineFileRecordReader, CombineFileSplit, FileInputFormat}
@@ -33,9 +33,16 @@ import org.apache.spark.sql.types._
   * driver-side iteration, no UDFs, fully whole-stage-codegen'd. On a real
   * cluster the glob listing is driver metadata work (same as any Hive-style
   * partitioned table) and the file contents are read by executors.
-  * [[transfersOf]] is the incremental form for transactions: it reads the
-  * named `(tenant, transaction)` files only, looked up by name instead of
-  * listed by glob, so a sync pass reads what its new events announce.
+  *
+  * A sync pass uses the incremental forms, which decide on the driver what
+  * to read, as the reference's loop does, and read it in one distributed
+  * job: [[tenantDirs]], [[accountDirs]] and [[eventFilesPast]] list the
+  * tree one directory at a time (the event rule is the reference's P8
+  * skip, with its density precondition), [[snapshotFile]] and
+  * [[transfersOf]] look files up by name, and [[accountsIn]] /
+  * [[eventsIn]] read listed files without listing them again. The glob
+  * readers serve the full-tree reads, the compacted manifest and the
+  * hybrid mode's live tail.
   */
 object Journal {
 
@@ -66,17 +73,24 @@ object Journal {
     * imperative IO" boundary, kept as small as possible.
     */
   private def globWholetext(spark: SparkSession, glob: String): DataFrame =
-    wholeFiles(spark, Seq(new Path(glob)), literal = false, name = glob)
+    wholeFiles(spark, Seq(new Path(glob)), listed = None, name = glob)
 
-  /** The shared reader under [[globWholetext]] and [[transfersOf]]: the
-    * files `paths` name — globs, or literal file paths when `literal` —
-    * listed ONCE, when the first job plans the read (the listing is
-    * memoized in the RDD's partitions; no existence probe precedes it).
-    * A literal path that does not exist, like a glob that matches
-    * nothing, contributes no row. `name` names the RDD (as
-    * `wholeTextFiles` names it after its path).
+  /** Whole-file read of files the driver already listed: [[WholeFiles]]
+    * takes their paths and lengths from the job configuration and looks
+    * nothing up again. */
+  private def listedWholetext(spark: SparkSession, files: Seq[FileStatus], name: String): DataFrame =
+    wholeFiles(spark, files.map(_.getPath), listed = Some(files.map(_.getLen)),
+      name = s"$name (${files.size} listed)")
+
+  /** The shared reader under [[globWholetext]] and [[listedWholetext]]:
+    * the files `paths` name — globs, or, with their `listed` lengths, the
+    * files themselves. A glob is listed ONCE, when the first job plans
+    * the read (the listing is memoized in the RDD's partitions; no
+    * existence probe precedes it); a glob that matches nothing contributes
+    * no row. `name` names the RDD (as `wholeTextFiles` names it after its
+    * path).
     */
-  private def wholeFiles(spark: SparkSession, paths: Seq[Path], literal: Boolean,
+  private def wholeFiles(spark: SparkSession, paths: Seq[Path], listed: Option[Seq[Long]],
       name: String): DataFrame = {
     import spark.implicits._
     val raw =
@@ -86,7 +100,7 @@ object Journal {
         // Path varargs, not a comma-joined string: every path stays one
         // path whatever it contains (',', '{', '[' and '*' included)
         FileInputFormat.setInputPaths(job, paths: _*)
-        job.getConfiguration.setBoolean(WholeFiles.LiteralKey, literal)
+        listed.foreach(lens => job.getConfiguration.set(WholeFiles.LengthsKey, lens.mkString(",")))
         job.getConfiguration.setInt(WholeFiles.MinPartitionsKey, spark.sparkContext.defaultParallelism)
         spark.sparkContext
           .newAPIHadoopRDD(job.getConfiguration, classOf[WholeFiles], classOf[Text], classOf[Text])
@@ -96,26 +110,30 @@ object Journal {
     raw.toDF("path", "value").select("value", "path")
   }
 
-  /** Combined whole-file splits over the input paths, listed once: a
-    * literal path by one status lookup (no glob parse, so no character in
-    * a journal name is special), a glob by one `globStatus`. Hidden names
-    * (`_`, `.`) are skipped as `FileInputFormat` skips them. The split
-    * budget is total bytes / min partitions, as in `wholeTextFiles`.
+  /** Combined whole-file splits over the input paths, listed at most
+    * once: a glob by one `globStatus`, hidden names (`_`, `.`) skipped as
+    * `FileInputFormat` skips them; listed files (their lengths under
+    * `LengthsKey`) with no file-system call at all, so no character in a
+    * journal name is special. The split budget is total bytes / min
+    * partitions, as in `wholeTextFiles`.
     */
   private[sources] final class WholeFiles extends CombineFileInputFormat[Text, Text] {
-    private var listed: java.util.List[FileStatus] = _
+    private var files: java.util.List[FileStatus] = _
 
     override protected def listStatus(job: JobContext): java.util.List[FileStatus] = {
-      if (listed == null) {
+      if (files == null) {
         val conf = job.getConfiguration
-        val literal = conf.getBoolean(WholeFiles.LiteralKey, false)
-        listed = FileInputFormat.getInputPaths(job).toSeq.flatMap { p =>
-          val fs = p.getFileSystem(conf)
-          if (literal) try Seq(fs.getFileStatus(p)) catch { case _: FileNotFoundException => Nil }
-          else Option(fs.globStatus(p)).fold(Seq.empty[FileStatus])(_.toSeq)
-        }.filter(st => st.isFile && !st.getPath.getName.matches("[_.].*")).asJava
+        val paths = FileInputFormat.getInputPaths(job).toSeq
+        files = Option(conf.get(WholeFiles.LengthsKey)) match {
+          case Some(lens) =>
+            paths.zip(lens.split(",").map(_.toLong))
+              .map { case (p, len) => new FileStatus(len, false, 1, len, 0L, p) }.asJava
+          case None =>
+            paths.flatMap(p => Option(p.getFileSystem(conf).globStatus(p)).fold(Seq.empty[FileStatus])(_.toSeq))
+              .filter(st => st.isFile && !hidden(st.getPath.getName)).asJava
+        }
       }
-      listed
+      files
     }
 
     override def getSplits(job: JobContext): java.util.List[InputSplit] = {
@@ -134,9 +152,12 @@ object Journal {
   }
 
   private[sources] object WholeFiles {
-    val LiteralKey = "graft.journal.literalPaths"
+    val LengthsKey = "graft.journal.listedLengths"
     val MinPartitionsKey = "graft.journal.minPartitions"
   }
+
+  /** Names `FileInputFormat` and the glob readers skip. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
   /** One file of a combined split as one (path, contents) record. */
   private[sources] final class WholeFile(split: CombineFileSplit, context: TaskAttemptContext,
@@ -164,17 +185,78 @@ object Journal {
     */
   def tenants(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names: Seq[String] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.matches("t_.+"))
-        .map(_.stripPrefix("t_"))
-    names.toDF("name")
+    tenantDirs(spark, root).map(_._1).toDF("name")
   }
+
+  /** The tenant directories under `root` as (tenant, directory): one
+    * listing, `t_.+` directories only. An absent root has none. */
+  def tenantDirs(spark: SparkSession, root: String): Seq[(String, Path)] = {
+    val p = new Path(root)
+    ls(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .filter(st => st.isDirectory && st.getPath.getName.matches("t_.+"))
+      .map(st => (st.getPath.getName.stripPrefix("t_"), st.getPath))
+  }
+
+  /** The account directories of `tenants` (as [[tenantDirs]] lists them)
+    * as (tenant, account, directory): one `account/` listing per tenant.
+    * Ref: PrimaryDataExplorationService.scala:66-99 (getAccountsFlow),
+    * which lists the same directories. */
+  def accountDirs(spark: SparkSession, tenants: Seq[(String, Path)]): Seq[(String, String, Path)] =
+    tenants.flatMap { case (tenant, dir) =>
+      ls(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), new Path(dir, "account"))
+        .filter(_.isDirectory).map(st => (tenant, st.getPath.getName, st.getPath))
+    }
+
+  /** An account directory's version-0 snapshot file, when it has one: one
+    * status lookup. An account directory appears before its snapshot is
+    * written; until then the account is not discovered. */
+  def snapshotFile(spark: SparkSession, accountDir: Path): Option[FileStatus] =
+    fileAt(accountDir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(accountDir, s"snapshot/${versionSegment(0)}"))
+
+  /** The event files of one account that a pass past its watermark
+    * (`snapshot`, `event`) must read, decided by listings (ref
+    * PrimaryDataExplorationService.scala:116, :155-159, :172-175, P8):
+    * every `events/<N>` directory with N above `snapshot`, and the
+    * watermark snapshot's own directory only when it holds more than
+    * `event` files. The second rule relies on the reference's density
+    * precondition — a snapshot's event versions are 1..n, one file each —
+    * exactly as the reference's `lastSynchronizedEvent >= size` skip
+    * does. Lower snapshots and directories whose name is not a number are
+    * never listed past `events/`. The caller still filters the read by
+    * version: the listing only decides what to skip.
+    */
+  def eventFilesPast(spark: SparkSession, accountDir: Path, snapshot: Int,
+      event: Int): Seq[FileStatus] = {
+    val fs = accountDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(d: Path) = ls(fs, d).filter(st => st.isFile && !hidden(st.getPath.getName))
+    ls(fs, new Path(accountDir, "events")).filter(_.isDirectory).flatMap { d =>
+      val name = d.getPath.getName
+      Option.when(name.forall(_.isDigit))(name).flatMap(_.toIntOption) match {
+        case Some(v) if v > snapshot => files(d.getPath)
+        case Some(v) if v == snapshot => Some(files(d.getPath)).filter(_.size > event).getOrElse(Nil)
+        case _ => Nil
+      }
+    }
+  }
+
+  /** Account metadata from the listed snapshot files ([[snapshotFile]]),
+    * read without listing them again. */
+  def accountsIn(spark: SparkSession, root: String, files: Seq[FileStatus]): DataFrame =
+    parseAccounts(listedWholetext(spark, files, s"$root/t_*/account/*/snapshot/"))
+
+  /** Events of the listed event files ([[eventFilesPast]]), read without
+    * listing them again. */
+  def eventsIn(spark: SparkSession, root: String, files: Seq[FileStatus]): DataFrame =
+    parseEvents(listedWholetext(spark, files, s"$root/t_*/account/*/events/"))
+
+  private def ls(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq catch { case _: FileNotFoundException => Nil }
+
+  /** The file at `p`, unless it is missing, a directory or hidden. */
+  private def fileAt(fs: FileSystem, p: Path): Option[FileStatus] =
+    (try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None })
+      .filter(st => st.isFile && !hidden(st.getPath.getName))
 
   /** Account metadata from each account's version-0 snapshot header.
     * Ref: PrimaryPersistence.scala:166-203 (S3): first line `CCY FORMAT_X`,
@@ -263,9 +345,11 @@ object Journal {
   private def transactionRel(tx: (String, String)): String = s"t_${tx._1}/transaction/${tx._2}"
 
   private def transactionFiles(spark: SparkSession, root: String,
-      txs: Seq[(String, String)]): DataFrame =
-    wholeFiles(spark, txs.map(tx => new Path(s"$root/${transactionRel(tx)}")), literal = true,
-      name = s"$root/t_*/transaction/ (${txs.size} named)")
+      txs: Seq[(String, String)]): DataFrame = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    listedWholetext(spark, txs.flatMap(tx => fileAt(fs, new Path(s"$root/${transactionRel(tx)}"))),
+      s"$root/t_*/transaction/")
+  }
 
   /** Transaction-file parse on a raw (value, path) frame — shared by the
     * batch reader above and the Structured Streaming source

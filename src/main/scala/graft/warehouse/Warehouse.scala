@@ -1,5 +1,8 @@
 package graft.warehouse
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -165,15 +168,64 @@ object Warehouse {
     * it was computed from. */
   private val MvSourcesFile = "_transfer_files"
 
+  /** Whether the balance-MV version `vdir` was computed from exactly the
+    * transfer-table data files `files` (paths or names): a small file
+    * read, no Spark job. [[sync]] republishes when CURRENT does not cover
+    * the table; a serving snapshot uses the MV only when the version it
+    * pinned covers the transfer listing it pinned. */
+  private[graft] def mvCovers(store: graft.operators.VStore, vdir: String, files: Seq[String]): Boolean = {
+    val recorded = store.child(vdir, MvSourcesFile)
+    store.exists(recorded) && store.readString(recorded) == mvSources(files)
+  }
+
+  private def mvSources(files: Seq[String]): String =
+    files.map(f => new Path(f).getName).sorted.mkString("\n")
+
+  /** What steps 1–2 of a [[sync]] pass found: the counts of new tenants
+    * (already written) and new accounts; the new accounts' rows, written
+    * with their watermarks in step 5, with their keys and journal bytes;
+    * and the events read, not yet filtered, joined with their accounts'
+    * watermarks (`last_syn_snapshot`, `last_syn_event`) — None when no
+    * event file needs reading. */
+  private final case class Discovered(newTenants: Long, newAccounts: Long,
+      fresh: DataFrame, freshKeys: Set[(String, String)], freshBytes: Long,
+      events: Option[DataFrame])
+
+  /** Input bytes per account-table write task (AQE's default advisory
+    * partition size). */
+  private val WriteTaskBytes = 64L << 20
+
+  private val watermarkSchema = StructType(Seq(StructField("tenant", StringType),
+    StructField("account", StringType), StructField("last_syn_snapshot", IntegerType),
+    StructField("last_syn_event", IntegerType)))
+
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** One incremental ETL pass: journal → warehouse tables, idempotently
     * merged into `warehouseDir` (parquet dirs tenant/account/transfer).
-    * Re-running on an unchanged journal is a no-op (T6 effectively-once).
+    * Re-running on an unchanged journal is a no-op that writes nothing
+    * (T6 effectively-once).
     *
     * Mirrors the reference exploration loop
     * (PrimaryDataExplorationService.scala:116-264) Spark-first:
-    *   1. tenants + newly-discovered accounts insert-only (S7/S8-insert);
-    *   2. events past each account's watermark (P8: snapshot_version ≥
-    *      last_syn_snapshot, version > last_syn_event);
+    *   1. new tenants and accounts, found by listings on the driver: one
+    *      listing of the root and one `t_<tenant>/account/` listing per
+    *      tenant, compared with one small collect of the tenant names and
+    *      the account watermarks. Only a new account's
+    *      `snapshot/0000000000` is read, by name. A new tenant is appended
+    *      now; an empty set writes no file (a first pass still creates
+    *      every table);
+    *   2. the events past each account's watermark (P8: snapshot_version ≥
+    *      last_syn_snapshot, version > last_syn_event), read from the files
+    *      a per-account listing of `events/` selects: every snapshot
+    *      directory above the watermark, and the watermark snapshot's
+    *      directory only when it holds more than `last_syn_event` files —
+    *      the reference's skip (ref :155-159, :172-175), which relies on its
+    *      density precondition (a snapshot's event versions are 1..n, one
+    *      file each). The version filter still runs on what is read, and
+    *      the new events are collected to the driver (on an initial pass,
+    *      every event);
     *   3. the transactions those events announce, read BY NAME
     *      (`t_<tenant>/transaction/<transaction>`, each file once; no other
     *      transaction file is listed or read), their transfers kept only
@@ -182,16 +234,29 @@ object Warehouse {
     *      (P7, :219-226) evaluated in the same read; skipped when no event
     *      announces anything (a first pass then writes the empty table);
     *   4. new transfers appended (anti-join on key, J3/E1);
-    *   5. account watermarks advanced via keep-latest upsert (T3, :260-264)
-    *      with the (last_syn_snapshot, last_syn_event) version tie-break;
+    *   5. the account table written once: its rows and the new accounts
+    *      left-joined with each advanced account's watermark (T3,
+    *      :260-264) — the keep-latest [[upsert]], since every mark is newer
+    *      than the row it replaces. It is rewritten (write-new-then-swap)
+    *      when an existing account advanced, and otherwise only appended
+    *      to, when there are new accounts. Writing the watermarks after the
+    *      transfers keeps a crashed pass rerunnable;
     *   6. the balance MV republished when its CURRENT version does not
     *      cover the transfer table's files (this pass appended, or a
     *      previous one stopped between steps 4 and 6).
     *
-    * Event and snapshot reads stay O(journal): an event's version lives in
-    * the file's contents, so finding the events past a watermark reads
-    * every event file. Warehouse tables are opened with
-    * [[tableSchemas]], so no pass runs a schema-inference job.
+    * Each journal directory is listed once per pass and read through its
+    * listing, so an unchanged journal reads no journal file, and an
+    * incremental pass reads its delta plus the watermark snapshot's
+    * directories that grew. Listings cost one driver call per tenant, per
+    * account and per selected snapshot directory (metadata requests on
+    * s3a/hdfs). Warehouse tables are opened with [[tableSchemas]], so no
+    * pass runs a schema-inference job.
+    *
+    * With `manifestDir` (the hybrid mode) steps 1–2 read instead: tenants,
+    * account snapshots and events of the compacted manifest plus the live
+    * tail, merged by anti-join, and every event joined with the account
+    * table. Steps 3–6 are shared.
     *
     * Step 3's cost follows the announced transactions, which on the
     * initial pass are all of them: the pairs are collected to the driver,
@@ -213,51 +278,29 @@ object Warehouse {
     import graft.sources.Journal
     import org.apache.spark.sql.Observation
 
-    // Hybrid source (the at-scale operating mode): compacted history from
-    // the parquet manifest (Journal.compact) plus the live tiny-file tail
-    // under journalRoot, deduplicated per FILE (Journal.*Hybrid) — a file
-    // that is both compacted and still on disk contributes once, so
-    // compaction and deletion of the originals need not be atomic, while
-    // duplicate records inside one file survive exactly as in a full read.
-    def entity(live: => DataFrame, hybrid: String => DataFrame): DataFrame =
-      manifestDir match {
-        case Some(m) => hybrid(m)
-        case None => live
-      }
-
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def tablePath(name: String) = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
+    def tablePath(name: String) = new Path(s"$warehouseDir/$name")
+    val fs = tablePath("account").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // recover from a crash inside a previous pass's account-table swap:
     // if only the retired copy survives, promote it back
-    locally {
-      val fs = tablePath("account").getFileSystem(hconf)
-      if (!fs.exists(tablePath("account")) && fs.exists(tablePath("account_old")))
-        fs.rename(tablePath("account_old"), tablePath("account"))
-      fs.delete(tablePath("account_old"), true)
-      fs.delete(tablePath("account_new"), true)
-      // the balance MV needs no recovery block: it lives in a
-      // VersionedRoot (immutable version dirs + atomic pointer), where a
-      // crashed publish leaves an orphan claim the next publish skips
-    }
+    if (!fs.exists(tablePath("account")) && fs.exists(tablePath("account_old")))
+      fs.rename(tablePath("account_old"), tablePath("account"))
+    fs.delete(tablePath("account_old"), true)
+    fs.delete(tablePath("account_new"), true)
+    // the balance MV needs no recovery block: it lives in a VersionedRoot
+    // (immutable version dirs + atomic pointer), where a crashed publish
+    // leaves an orphan claim the next publish skips
 
     // a warehouse table with its known schema (no inference job), or an
     // empty one before its first write
-    def table(name: String): DataFrame = {
-      val p = tablePath(name)
-      if (p.getFileSystem(hconf).exists(p)) spark.read.schema(tableSchemas(name)).parquet(p.toString)
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), tableSchemas(name))
-    }
+    def table(name: String): DataFrame =
+      if (fs.exists(tablePath(name))) spark.read.schema(tableSchemas(name)).parquet(tablePath(name).toString)
+      else local(spark, Nil, tableSchemas(name))
 
-    // the transfer table's data files, one name per line: what the balance
-    // MV must cover (a file listing, no Spark job)
-    def transferFiles(): String = {
-      val p = tablePath("transfer")
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) ""
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.mkString("\n")
-    }
+    // a table's data files (a listing, no Spark job)
+    def tableFiles(name: String): Seq[FileStatus] =
+      if (!fs.exists(tablePath(name))) Nil
+      else fs.listStatus(tablePath(name)).toSeq.filterNot(st => st.getPath.getName.matches("[_.].*"))
 
     // A2 discovery counters: observe the merge write itself (no extra pass)
     def append(df: DataFrame, name: String): Long = {
@@ -266,45 +309,79 @@ object Warehouse {
       obs.get("n").asInstanceOf[Long]
     }
 
-    val tenants = entity(Journal.tenants(spark, journalRoot),
-      Journal.tenantsHybrid(spark, journalRoot, _))
-    val accounts = entity(Journal.accounts(spark, journalRoot),
-      Journal.accountsHybrid(spark, journalRoot, _))
+    val found = manifestDir match {
+      case Some(m) =>
+        // Hybrid source (the at-scale operating mode): compacted history
+        // from the parquet manifest (Journal.compact) plus the live
+        // tiny-file tail under journalRoot, deduplicated per FILE
+        // (Journal.*Hybrid) — a file that is both compacted and still on
+        // disk contributes once, so compaction and deletion of the
+        // originals need not be atomic, while duplicate records inside one
+        // file survive exactly as in a full read.
+        val nTenants = append(newRows(Journal.tenantsHybrid(spark, journalRoot, m),
+          table("tenant"), Seq("name")), "tenant")
+        val nAccounts = append(newRows(Journal.accountsHybrid(spark, journalRoot, m),
+          table("account"), Seq("tenant", "name")), "account")
+        Discovered(nTenants, nAccounts, local(spark, Nil, tableSchemas("account")), Set.empty, 0L,
+          Some(Journal.eventsHybrid(spark, journalRoot, m)
+            .join(table("account").select(col("tenant"), col("name").as("account"),
+              col("last_syn_snapshot"), col("last_syn_event")), Seq("tenant", "account"))))
+      case None =>
+        // what the tables hold, in one small collect: the tenant names
+        // (rows without an account name) and every account's watermark. A
+        // null watermark field matches no event in the filter below, so
+        // it maps to Int.MaxValue, which selects no directory either.
+        val held = table("tenant")
+          .select(col("name").as("tenant"), lit(null).cast(StringType).as("name"),
+            lit(null).cast(IntegerType).as("last_syn_snapshot"), lit(null).cast(IntegerType).as("last_syn_event"))
+          .unionByName(table("account").select("tenant", "name", "last_syn_snapshot", "last_syn_event"))
+          .collect()
+        val (tenantRows, accountRows) = held.partition(_.isNullAt(1))
+        def orMax(r: Row, i: Int) = if (r.isNullAt(i)) Int.MaxValue else r.getInt(i)
+        val marks = accountRows.map(r => (r.getString(0), r.getString(1)) -> (orMax(r, 2), orMax(r, 3))).toMap
 
-    val nTenants = append(newRows(tenants, table("tenant"), Seq("name")), "tenant")
-    val nAccounts = append(newRows(accounts, table("account"), Seq("tenant", "name")), "account")
+        val tenantDirs = Journal.tenantDirs(spark, journalRoot)
+        val newTenants = tenantDirs.map(_._1).toSet -- tenantRows.map(_.getString(0))
+        if (newTenants.nonEmpty || !fs.exists(tablePath("tenant")))
+          local(spark, newTenants.toSeq.map(Row(_)), tableSchemas("tenant")).coalesce(1)
+            .write.mode("append").parquet(tablePath("tenant").toString)
 
-    val accountTable = table("account")
+        val accountDirs = Journal.accountDirs(spark, tenantDirs)
+        val snapshots = accountDirs.filterNot(a => marks.contains((a._1, a._2)))
+          .flatMap(a => Journal.snapshotFile(spark, a._3).map((a._1, a._2) -> _)).toMap
+        // every account the table holds after this pass at its watermark
+        // (a new one starts at (0, 0)), with the event files past it
+        val listed = accountDirs.flatMap { case (t, n, dir) =>
+          marks.get((t, n)).orElse(Option.when(snapshots.contains((t, n)))((0, 0)))
+            .map { case (s, e) => (Row(t, n, s, e), Journal.eventFilesPast(spark, dir, s, e)) }
+        }.filter(_._2.nonEmpty)
+        Discovered(newTenants.size, snapshots.size,
+          Journal.accountsIn(spark, journalRoot, snapshots.values.toSeq), snapshots.keySet,
+          snapshots.values.map(_.getLen).sum,
+          Option.when(listed.nonEmpty)(Journal.eventsIn(spark, journalRoot, listed.flatMap(_._2))
+            .join(local(spark, listed.map(_._1), watermarkSchema), Seq("tenant", "account"))))
+    }
 
-    // P8: watermark filter — events already mirrored are skipped. Event
-    // versions restart per snapshot (ref :157-158), so the version guard
-    // applies ONLY within the watermark snapshot; any newer snapshot's
-    // events are all unseen regardless of their (restarted) version
-    // (ref PrimaryDataExplorationService.scala:171-175).
-    val events = entity(Journal.events(spark, journalRoot),
-      Journal.eventsHybrid(spark, journalRoot, _))
-      .join(accountTable.select(col("tenant"), col("name").as("account"),
-        col("last_syn_snapshot"), col("last_syn_event")), Seq("tenant", "account"))
+    // P8: the watermark filter, on what was read. Event versions restart
+    // per snapshot (ref :157-158), so the version guard applies ONLY
+    // within the watermark snapshot; any newer snapshot's events are all
+    // unseen regardless of their (restarted) version (ref :171-175).
+    // Non-pending events announce their transactions.
+    val newEvents = found.events.fold(Array.empty[Row])(_
       .filter(col("snapshot_version") > col("last_syn_snapshot") ||
         (col("snapshot_version") === col("last_syn_snapshot") &&
           col("version") > col("last_syn_event")))
-      .cache()
-
-    // Non-pending events announce their transactions; only those files are
-    // read, each once, however many accounts announce it. The same job
-    // tells whether the pass found any new event (step 5's condition).
-    val announces = coalesce(col("status") =!= 0, lit(false))
-    val announced = events.filter(announces)
-      .select(col("tenant"), col("account"), col("transaction"),
-        col("status").as("event_status"))
-    val newEvents = events.select(col("tenant"), col("transaction"), announces).distinct().collect()
-    val txs = newEvents.filter(_.getBoolean(2)).map(r => (r.getString(0), r.getString(1))).toSeq
+      .select(col("tenant"), col("account"), col("snapshot_version"), col("version"),
+        col("transaction"), col("status"), coalesce(col("status") =!= 0, lit(false)))
+      .collect())
+    val announcing = newEvents.filter(_.getBoolean(6))
+    val txs = announcing.map(r => (r.getString(0), r.getString(4))).distinct.toSeq
     val nTransfers =
       if (txs.isEmpty) {
         // nothing to read; the first pass still creates the (empty) table,
         // so every pass leaves all three tables for readers to open
-        if (!tablePath("transfer").getFileSystem(hconf).exists(tablePath("transfer")))
-          table("transfer").write.parquet(s"$warehouseDir/transfer")
+        if (!fs.exists(tablePath("transfer")))
+          table("transfer").write.parquet(tablePath("transfer").toString)
         0L
       } else {
         // P6: the announcing account must be one side of the transfer. P7:
@@ -313,10 +390,15 @@ object Warehouse {
         // :219-226). The check is observed on the one read of the files,
         // which the append then reuses from the local checkpoint (not a
         // cache: the append's stages then carry no journal-read lineage).
+        val announced = local(spark,
+          announcing.map(r => Row(r.getString(0), r.getString(1), r.getString(4), r.get(5))).toSeq,
+          StructType(Seq(StructField("tenant", StringType), StructField("account", StringType),
+            StructField("transaction", StringType), StructField("event_status", IntegerType))))
         val p7 = Observation()
-        val txTransfers = entity(Journal.transfersOf(spark, journalRoot, txs),
-          Journal.transfersOfHybrid(spark, journalRoot, _, txs))
-          .join(announced, Seq("tenant", "transaction"))
+        val txTransfers = (manifestDir match {
+          case Some(m) => Journal.transfersOfHybrid(spark, journalRoot, m, txs)
+          case None => Journal.transfersOf(spark, journalRoot, txs)
+        }).join(announced, Seq("tenant", "transaction"))
           .filter(col("credit_name") === col("account") ||
             col("debit_name") === col("account"))
           .observe(p7, count(when(col("status") =!= col("event_status"), 1)).as("n"))
@@ -338,34 +420,53 @@ object Warehouse {
         }
       }
 
-    // T3: advance per-account watermarks through the keep-latest upsert.
-    // The new watermark is the lexicographic max of (snapshot, version) —
-    // pairing max(snapshot) with the global max(version) ACROSS snapshots
-    // would fabricate a watermark no event carries and skip real events
-    // after a snapshot rotation (versions restart per snapshot).
-    val marks = events.groupBy(col("tenant"), col("account").as("name"))
-      .agg(max(struct(col("snapshot_version"), col("version"))).as("__m"))
-      .select(col("tenant"), col("name"),
-        col("__m.snapshot_version").as("last_syn_snapshot"),
-        col("__m.version").as("last_syn_event"))
-    if (newEvents.nonEmpty) {
-      val updated = accountTable
-        .join(marks, Seq("tenant", "name"), "left_semi")
-        .drop("last_syn_snapshot", "last_syn_event")
-        .join(marks, Seq("tenant", "name"))
-        .select(accountTable.columns.map(col): _*)
-      val merged = upsert(updated, accountTable, Seq("tenant", "name"),
-        Seq("last_syn_snapshot", "last_syn_event"))
-      // write-new-then-swap: the merged plan reads the live account files,
-      // so a direct overwrite would delete its own input mid-plan. The
-      // retire-then-promote rename order means a crash at any point leaves
-      // either `account` or `account_old` intact (recovered at pass start);
-      // a table format (Delta/Iceberg MERGE) is the real answer at scale.
-      val fs = tablePath("account").getFileSystem(hconf)
-      merged.write.mode("overwrite").parquet(s"$warehouseDir/account_new")
-      fs.rename(tablePath("account"), tablePath("account_old"))
-      fs.rename(tablePath("account_new"), tablePath("account"))
-      fs.delete(tablePath("account_old"), true)
+    // T3: each advanced account's new watermark is the lexicographic max of
+    // its new events' (snapshot, version) — pairing max(snapshot) with the
+    // global max(version) ACROSS snapshots would fabricate a watermark no
+    // event carries and skip real events after a snapshot rotation
+    // (versions restart per snapshot). A null version orders first, as in
+    // Spark's struct ordering.
+    val advanced = newEvents.groupBy(r => (r.getString(0), r.getString(1))).map { case (k, rs) =>
+      k -> rs.map(r => (r.getInt(2), Option(r.get(3)).map(_.asInstanceOf[Int]))).max
+    }
+    val rewrite = advanced.keys.exists(k => !found.freshKeys(k))
+    if (rewrite || found.freshKeys.nonEmpty || !fs.exists(tablePath("account"))) {
+      // The filter above keeps only events past each watermark, so every
+      // mark is newer than the row it replaces, and the keep-latest upsert
+      // is this left join. It is a shuffle-free broadcast when the marks
+      // are small (the planner decides by size; an initial pass marks
+      // every account). Write tasks follow the input's bytes, as AQE sizes
+      // a shuffle's partitions: one file per write on small tables, and a
+      // rewrite does not keep the files of earlier appends. (An initial
+      // pass over a large live tree then reads its new accounts' snapshot
+      // files in that few tasks too; a large history belongs in the
+      // hybrid mode's manifest.)
+      val marks = local(spark, advanced.toSeq.map { case ((t, n), (s, e)) => Row(t, n, s, e.orNull) },
+        StructType(Seq(StructField("tenant", StringType), StructField("name", StringType),
+          StructField("mark_snapshot", IntegerType), StructField("mark_event", IntegerType))))
+      val rows = if (rewrite) table("account").unionByName(found.fresh) else found.fresh
+      val bytes = (if (rewrite) tableFiles("account").map(_.getLen).sum else 0L) + found.freshBytes
+      val accounts = rows.join(marks, Seq("tenant", "name"), "left")
+        .select(col("tenant"), col("name"), col("currency"), col("format"),
+          when(col("mark_snapshot").isNull, col("last_syn_snapshot")).otherwise(col("mark_snapshot"))
+            .as("last_syn_snapshot"),
+          when(col("mark_snapshot").isNull, col("last_syn_event")).otherwise(col("mark_event"))
+            .as("last_syn_event"))
+        .coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism.toLong,
+          (bytes + WriteTaskBytes - 1) / WriteTaskBytes)).toInt)
+      if (!rewrite) accounts.write.mode("append").parquet(tablePath("account").toString)
+      else {
+        // write-new-then-swap: the plan reads the live account files, so a
+        // direct overwrite would delete its own input mid-plan. The
+        // retire-then-promote rename order means a crash at any point
+        // leaves either `account` or `account_old` intact (recovered at
+        // pass start); a table format (Delta/Iceberg MERGE) is the real
+        // answer at scale.
+        accounts.write.mode("overwrite").parquet(tablePath("account_new").toString)
+        fs.rename(tablePath("account"), tablePath("account_old"))
+        fs.rename(tablePath("account_new"), tablePath("account"))
+        fs.delete(tablePath("account_old"), true)
+      }
     }
     // M10 at ingest, executed: the sync pass maintains the balance
     // pre-agg the BalanceMvRewrite optimizer rule serves from
@@ -394,11 +495,9 @@ object Warehouse {
     // pass that stopped before this point, after or before its account
     // swap. A pass that appended nothing leaves the list as it was.
     val (mvStore, mvRoot) = balancesRoot(warehouseDir)
-    val sources = transferFiles()
-    val mvCurrent = VersionedRoot.publishedAt(mvStore, mvRoot) && {
-      val recorded = mvStore.child(VersionedRoot.resolveAt(mvStore, mvRoot), MvSourcesFile)
-      mvStore.exists(recorded) && mvStore.readString(recorded) == sources
-    }
+    val sources = tableFiles("transfer").map(_.getPath.getName)
+    val mvCurrent = VersionedRoot.publishedAt(mvStore, mvRoot) &&
+      mvCovers(mvStore, VersionedRoot.resolveAt(mvStore, mvRoot), sources)
     if (!mvCurrent) {
       // the refresh MUST NOT be answered by the very rule it feeds: on
       // a serving session the installed rewrite matches this exact
@@ -406,23 +505,22 @@ object Warehouse {
       graft.plans.BalanceMvRewrite.suppressed {
         VersionedRoot.publishAt(mvStore, mvRoot, { vdir =>
           balancePreAgg(table("transfer")).write.mode("overwrite").parquet(vdir)
-          mvStore.writeString(mvStore.child(vdir, MvSourcesFile), sources)
+          mvStore.writeString(mvStore.child(vdir, MvSourcesFile), mvSources(sources))
         }): Unit
       }
       val keep = spark.conf
         .get("spark.graft.balance.mvKeepVersions", "2").toInt
       VersionedRoot.retireAt(mvStore, mvRoot, keep = keep)
     }
-    events.unpersist()
     // A2 transport: the observed counters leave the process in the
     // reference's statsd aspect names (PrimaryDataExplorationService
     // .scala:58, 92, 247 + memory gauge, asserted by
     // bbtest/features/metrics.feature:31-37)
-    metrics.count("discovery.tenant", nTenants)
-    metrics.count("discovery.account", nAccounts)
+    metrics.count("discovery.tenant", found.newTenants)
+    metrics.count("discovery.account", found.newAccounts)
     metrics.count("discovery.transfer", nTransfers)
     val rt = Runtime.getRuntime
     metrics.gauge("memory.bytes", rt.totalMemory() - rt.freeMemory())
-    SyncStats(nTenants, nAccounts, nTransfers)
+    SyncStats(found.newTenants, found.newAccounts, nTransfers)
   }
 }

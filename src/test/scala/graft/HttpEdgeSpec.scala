@@ -504,6 +504,73 @@ class HttpEdgeSpec extends SparkSpec {
     } finally edge.stop()
   }
 
+  /** The balance `{ account }` and the CREDIT row of `{ balances }` answer
+    * in ONE GraphQL request, i.e. from one snapshot. */
+  private def creditBalances(port: Int): (String, String) = {
+    val (c, body) = gql(port, """{ account(tenant: "TENANT", name: "CREDIT") { balance }
+                                |  balances(tenant: "TENANT") { name balance } }""".stripMargin)
+    assert(c == 200, body)
+    def one(re: String) = re.r.findFirstMatchIn(body).map(_.group(1))
+      .getOrElse(fail(s"no match for $re in $body"))
+    (one("\"account\":\\{\"balance\":(-?[\\d.]+)\\}"),
+      one("\\{\"name\":\"CREDIT\",\"balance\":(-?[\\d.]+)\\}"))
+  }
+
+  /** A sync pass's step 4 alone: the journal's new transfers appended to
+    * the transfer table, the balance MV not republished. */
+  private def appendTransfers(journal: String, wh: String): Unit =
+    Warehouse.newRows(graft.sources.Journal.transfers(spark, journal),
+      spark.read.parquet(s"$wh/transfer"), Seq("tenant", "transaction", "transfer"))
+      .write.mode("append").parquet(s"$wh/transfer")
+
+  test("a snapshot pairs the balance MV only with the transfers it covers") {
+    val journal = fixture()
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, journal, wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    try {
+      val port = edge.boundPort
+      assert(creditBalances(port) == ("1", "1"))
+      // a pass stopped after its transfer append (+5), before its MV
+      // publish; a refresh now must not serve the old MV beside the new
+      // transfers
+      addTransfer(journal, 2, 5)
+      appendTransfers(journal, wh)
+      edge.refresh()
+      assert(creditBalances(port) == ("6", "6"))
+      assert(get(port, "/balances?tenant=TENANT")._2.contains("\"balance\":6.0"))
+      assert(get(port, "/account?tenant=TENANT&name=CREDIT")._2.contains("\"balance\":6.0"))
+      // the next pass publishes a covering MV, which the next snapshot serves
+      Warehouse.sync(spark, journal, wh)
+      edge.refresh()
+      assert(creditBalances(port) == ("6", "6"))
+    } finally edge.stop()
+  }
+
+  test("a stale-file refresh between a pass's account swap and its MV publish serves agreeing balances") {
+    val journal = fixture()
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, journal, wh)
+    val edge = new HttpEdge(spark, wh, port = 0).start()
+    try {
+      val port = edge.boundPort
+      assert(get(port, "/tenants")._1 == 200)
+      // steps 4 and 5 of a pass: the +5 transfer appended, then the account
+      // table swapped (watermarks advanced); step 6 has not run yet
+      addTransfer(journal, 2, 5)
+      appendTransfers(journal, wh)
+      spark.read.parquet(s"$wh/account").withColumn("last_syn_event", org.apache.spark.sql.functions.lit(2))
+        .write.parquet(s"$wh/account_new")
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$wh/account"), true)
+      fs.rename(new org.apache.hadoop.fs.Path(s"$wh/account_new"), new org.apache.hadoop.fs.Path(s"$wh/account"))
+      // a new request meets the swapped files: the edge refreshes, and the
+      // refreshed snapshot must not pair the old MV with the new transfers
+      assert(creditBalances(port) == ("6", "6"))
+      assert(metrics(port)("stale_refreshes") == 1)
+    } finally edge.stop()
+  }
+
   test("GET /metrics counts stored answers, hits and misses") {
     withEdge { port =>
       assert(metrics(port) == Map("answers" -> 0, "chars" -> 0, "hits" -> 0,

@@ -9,7 +9,7 @@ import graft.sources.Journal
 import graft.streaming.JournalStream
 import graft.warehouse.Warehouse
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -206,6 +206,25 @@ class SyncSpec extends SparkSpec {
     tx.map(_.stageInfo.taskMetrics.inputMetrics.recordsRead).sum
   }
 
+  /** Journal files of kind `dir` ("/events/", "/snapshot/",
+    * "/transaction/") read by the stages that read them, 0 when none did. */
+  private def filesRead(stages: Seq[SparkListenerStageCompleted], dir: String): Long =
+    stages.filter(_.stageInfo.rddInfos.exists(_.name.contains(dir)))
+      .map(_.stageInfo.taskMetrics.inputMetrics.recordsRead).sum
+
+  /** Every file under `dir`, relative, with its length. */
+  private def filesUnder(dir: String): Set[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => (root.relativize(p).toString, Files.size(p))).toSet
+    finally walk.close()
+  }
+
+  private def watermarks(wh: String): Map[String, (Int, Int)] =
+    spark.read.parquet(s"$wh/account").select("name", "last_syn_snapshot", "last_syn_event")
+      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
+
   private def addTransfer(root: Path, tx: String, v: Int, amount: Int): Unit = {
     put(root, s"t_T/account/CREDIT/events/0000000000/1_1_$tx", s"$v\n")
     put(root, s"t_T/account/DEBIT/events/0000000000/1_-1_$tx", s"$v\n")
@@ -286,6 +305,110 @@ class SyncSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/transfer").count() == 2)
   }
 
+  test("listings pick the event directories a pass reads; the version filter still runs") {
+    val root = baseFixture()
+    val wh = Files.createTempDirectory("wh").toString
+    def pass(): (Warehouse.SyncStats, Long) = {
+      val (stats, stages, _) = traced(Warehouse.sync(spark, root.toString, wh))
+      (stats, filesRead(stages, "/events/"))
+    }
+    assert(pass() == (Warehouse.SyncStats(1, 2, 1), 2))
+    // new events in the watermark snapshot: its directory holds 2 files,
+    // more than last_syn_event 1, so both are read and v1 filtered out
+    addTransfer(root, "TRN2", 2, 2)
+    assert(pass() == (Warehouse.SyncStats(0, 0, 1), 4))
+    assert(watermarks(wh) == Map("CREDIT" -> (0, 2), "DEBIT" -> (0, 2)))
+    // a rotation whose versions restart at 1: the new snapshot's directory
+    // is read in full; snapshot 0 (2 files, last_syn_event 2) is skipped
+    put(root, "t_T/account/CREDIT/events/0000000001/1_1_TRN3", "1\n")
+    put(root, "t_T/account/DEBIT/events/0000000001/1_-1_TRN3", "1\n")
+    put(root, "t_T/transaction/TRN3", "committed\nX3 T CREDIT T DEBIT 2020-02-01T00:00:00Z 3 CZK\n")
+    assert(pass() == (Warehouse.SyncStats(0, 0, 1), 2))
+    assert(watermarks(wh) == Map("CREDIT" -> (1, 1), "DEBIT" -> (1, 1)))
+    // a directory under events/ whose name is not a snapshot number is
+    // ignored, as the glob read's path parse ignores it; so is a file
+    // directly under events/
+    put(root, "t_T/account/CREDIT/events/tmp/1_1_TRN4", "9\n")
+    put(root, "t_T/account/CREDIT/events/1_1_TRN4", "9\n")
+    put(root, "t_T/transaction/TRN4", "committed\nX4 T CREDIT T DEBIT 2020-02-02T00:00:00Z 4 CZK\n")
+    assert(pass() == (Warehouse.SyncStats(0, 0, 0), 0))
+    assert(watermarks(wh) == Map("CREDIT" -> (1, 1), "DEBIT" -> (1, 1)))
+    assert(spark.read.parquet(s"$wh/transfer").count() == 3)
+  }
+
+  test("an account directory without its snapshot yet is found on a later pass, events included") {
+    val root = baseFixture()
+    put(root, "t_T/account/LATE/events/0000000000/1_1_TRN9", "1\n")
+    put(root, "t_T/transaction/TRN9", "committed\nX9 T LATE T DEBIT 2021-01-01T00:00:00Z 2 CZK\n")
+    val wh = Files.createTempDirectory("wh").toString
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(1, 2, 1))
+    assert(!watermarks(wh).contains("LATE"))
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(0, 0, 0))
+    put(root, "t_T/account/LATE/snapshot/0000000000", "EUR FORMAT_T\n")
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(0, 1, 1))
+    assert(watermarks(wh)("LATE") == (0, 1))
+    val late = spark.read.parquet(s"$wh/account").filter(col("name") === "LATE")
+      .select("currency", "format").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(late == Seq(("EUR", "FORMAT")))
+    assert(spark.read.parquet(s"$wh/transfer").filter(col("transfer") === "X9").count() == 1)
+  }
+
+  test("the watermark snapshot is read only past its file count: the reference's density precondition") {
+    // PrimaryDataExplorationService skips a snapshot's events when
+    // lastSynchronizedEvent >= its file count, which assumes versions
+    // 1..n, one file each. A journal whose versions skip numbers breaks
+    // that, and the pass then skips what the reference skips
+    val root = baseFixture()
+    put(root, "t_T/account/CREDIT/events/0000000000/1_1_TRN", "5\n") // v5, not v1
+    val wh = Files.createTempDirectory("wh").toString
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(1, 2, 1))
+    assert(watermarks(wh)("CREDIT") == (0, 5))
+    // a second file (v6): 2 files <= last_syn_event 5, so not read
+    put(root, "t_T/account/CREDIT/events/0000000000/1_1_TRN2", "6\n")
+    put(root, "t_T/transaction/TRN2", "committed\nX2 T CREDIT T DEBIT 2020-01-02T00:00:00Z 2 CZK\n")
+    val (stats, stages, _) = traced(Warehouse.sync(spark, root.toString, wh))
+    assert(stats == Warehouse.SyncStats(0, 0, 0))
+    assert(filesRead(stages, "/events/") == 0)
+    assert(watermarks(wh)("CREDIT") == (0, 5))
+    // the next snapshot is read in full, whatever its versions
+    put(root, "t_T/account/CREDIT/events/0000000001/1_1_TRN3", "1\n")
+    put(root, "t_T/transaction/TRN3", "committed\nX3 T CREDIT T DEBIT 2020-01-03T00:00:00Z 3 CZK\n")
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(0, 0, 1))
+    assert(watermarks(wh)("CREDIT") == (1, 1))
+  }
+
+  test("an unchanged-journal pass reads no journal file and writes no file") {
+    val root = baseFixture()
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, root.toString, wh)
+    addTransfer(root, "TRN2", 2, 2)
+    Warehouse.sync(spark, root.toString, wh)
+    val before = filesUnder(wh)
+    val (stats, stages, _) = traced(Warehouse.sync(spark, root.toString, wh))
+    assert(stats == Warehouse.SyncStats(0, 0, 0))
+    val journalStages = stages.filter(_.stageInfo.rddInfos.exists(_.name.contains(root.toString)))
+    assert(journalStages.isEmpty, s"stages read the journal: ${journalStages.map(_.stageInfo.name)}")
+    val written = stages.map(_.stageInfo.taskMetrics.outputMetrics)
+    assert(written.map(_.bytesWritten).sum == 0 && written.map(_.recordsWritten).sum == 0)
+    assert(filesUnder(wh) == before)
+  }
+
+  test("a pass with new events and no new tenant or account writes no tenant file and appends no account file") {
+    val root = baseFixture()
+    val wh = Files.createTempDirectory("wh").toString
+    Warehouse.sync(spark, root.toString, wh)
+    val tenantFiles = filesUnder(s"$wh/tenant")
+    addTransfer(root, "TRN2", 2, 2)
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(0, 0, 1))
+    assert(filesUnder(s"$wh/tenant") == tenantFiles)
+    // the watermark rewrite leaves the account table in one data file
+    assert(filesUnder(s"$wh/account").count(_._1.endsWith(".parquet")) == 1)
+    // a new tenant is one more tenant file
+    put(root, "t_U/account/U1/snapshot/0000000000", "CZK FORMAT_T\n")
+    assert(Warehouse.sync(spark, root.toString, wh) == Warehouse.SyncStats(1, 1, 0))
+    assert(filesUnder(s"$wh/tenant").count(_._1.endsWith(".parquet")) == 2)
+  }
+
   /** The CURRENT balance MV and balancePreAgg over the transfer table. */
   private def mvAndTruth(wh: String): (Set[String], Set[String]) = {
     def rows(df: DataFrame) = df.select("tenant", "name", "balance").collect().map(_.toString).toSet
@@ -328,8 +451,10 @@ class SyncSpec extends SparkSpec {
     * non-party line (P6), transactions announced by one party now and the
     * other a pass later, announced transactions whose file is missing, and
     * (pass 3) a new tenant. After every pass: its SyncStats and a digest of
-    * each table's rows and of the CURRENT balance MV. */
-  private def seededPasses(seed: Long, passes: Int): Seq[String] = {
+    * each table's rows and of the CURRENT balance MV. `afterPass` sees the
+    * journal root, the warehouse and the account rows from before the pass. */
+  private def seededPasses(seed: Long, passes: Int,
+      afterPass: (Path, String, Seq[Row]) => Unit = (_, _, _) => ()): Seq[String] = {
     val rng = new scala.util.Random(seed)
     val root = Files.createTempDirectory("seeded")
     val wh = Files.createTempDirectory("wh").toString
@@ -377,7 +502,11 @@ class SyncSpec extends SparkSpec {
         if (rng.nextDouble() < 0.15) deferred += (() => event(t, db, status, -1, tx))
         else event(t, db, status, -1, tx)
       }
+      val before =
+        if (Files.exists(java.nio.file.Paths.get(wh, "account"))) spark.read.parquet(s"$wh/account").collect().toSeq
+        else Nil
       val stats = Warehouse.sync(spark, root.toString, wh)
+      afterPass(root, wh, before)
       val (st, mvRoot) = Warehouse.balancesRoot(wh)
       val tables = Seq("tenant", "account", "transfer").map(n => digest(spark.read.parquet(s"$wh/$n")))
       (s"pass $k: $stats" +: tables :+ digest(spark.read.parquet(VersionedRoot.resolveAt(st, mvRoot))))
@@ -396,6 +525,37 @@ class SyncSpec extends SparkSpec {
       "pass 5: SyncStats(0,0,10) 3:2e70d7238a20 12:706c18cacadd 55:12a7a172b9f2 12:4b9e504d1912")
     val got = seededPasses(seed = 7L, passes = 5)
     assert(got == recorded, got.mkString("\n", "\n", ""))
+  }
+
+  test("each pass leaves the account table the keep-latest upsert of its watermarks would") {
+    // the upsert spelling the watermark join replaced: discovered accounts
+    // appended, every event past its account's watermark (glob read), the
+    // per-account max (snapshot, version), then union + row_number
+    def upserted(root: Path, before: Seq[Row]): Set[String] = {
+      val keys = Seq("tenant", "name")
+      val held = spark.createDataFrame(before.asJava, Warehouse.tableSchemas("account"))
+      val table = held.unionByName(Warehouse.newRows(Journal.accounts(spark, root.toString), held, keys))
+      val marks = Journal.events(spark, root.toString)
+        .join(table.select(col("tenant"), col("name").as("account"), col("last_syn_snapshot"),
+          col("last_syn_event")), Seq("tenant", "account"))
+        .filter(col("snapshot_version") > col("last_syn_snapshot") ||
+          (col("snapshot_version") === col("last_syn_snapshot") && col("version") > col("last_syn_event")))
+        .groupBy(col("tenant"), col("account").as("name"))
+        .agg(max(struct(col("snapshot_version"), col("version"))).as("m"))
+        .select(col("tenant"), col("name"), col("m.snapshot_version").as("last_syn_snapshot"),
+          col("m.version").as("last_syn_event"))
+      val updated = table.join(marks, keys, "left_semi").drop("last_syn_snapshot", "last_syn_event")
+        .join(marks, keys).select(table.columns.map(col): _*)
+      Warehouse.upsert(updated, table, keys, Seq("last_syn_snapshot", "last_syn_event"))
+        .collect().map(_.toString).toSet
+    }
+    var checked = 0
+    seededPasses(seed = 11L, passes = 4, afterPass = { (root, wh, before) =>
+      val want = upserted(root, before)
+      assert(spark.read.parquet(s"$wh/account").collect().map(_.toString).toSet == want)
+      checked += 1
+    })
+    assert(checked == 4)
   }
 
   test("balance MV root dispatches backend by scheme; copy-rename stores fail fast") {

@@ -15,11 +15,13 @@ Prints every pair's metrics and, per metric, each side's median and
 quartiles, the median B/A ratio over the pairs and how many pairs B won
 (direction from BENCHMARK.json). "gain" marks a metric where B won at least
 nine tenths of the pairs and the medians differ by more than A's
-interquartile range. Each side's sync_reads_per_s, hot_p50_ms and
-cold_p50_ms are shown beside the metrics, read from the summary of that
-side's .bench_build/perfbench/results/<workload>-seed<N>-trace<T>.json when
-the run wrote them: the sync reader is a closed loop, so its read rate moves
-with serving latency and explains work_s moves. A run that fails or answers
+interquartile range. Each side's sync_reads_per_s, hot_p50_ms,
+cold_p50_ms, noop_pass_s and fresh_lag_p50_s are shown beside the metrics,
+read from the summary of that side's
+.bench_build/perfbench/results/<workload>-seed<N>-trace<T>.json when the run
+wrote them: the sync reader is a closed loop, so its read rate moves with
+serving latency and explains work_s moves, and the unchanged-journal pass and
+the fresh lag show what a sync change does to idle passes and freshness. A run that fails or answers
 wrong is reported and its pair left out. --out appends one JSON line per run. With --trace 1 each pair
 is followed by perfbench/diff_counters.py over that seed's A and B result
 files: the counters that do not depend on the machine, A -> B.
@@ -41,7 +43,7 @@ def seeds(spec):
 
 
 # summary figures shown beside the metrics, never judged
-SUMMARY = ("sync_reads_per_s", "hot_p50_ms", "cold_p50_ms")
+SUMMARY = ("sync_reads_per_s", "hot_p50_ms", "cold_p50_ms", "noop_pass_s", "fresh_lag_p50_s")
 
 
 def run(checkout, args, seed):
